@@ -12,6 +12,20 @@ Topic layout on disk::
 One JSONL line per message payload (UTF-8). Entry ids are dense line
 numbers within a ledger; ledger rollover creates the offset gaps real
 Pulsar has, which is exactly what the gap-tolerant seek must handle.
+Beside each ledger sit two optional sidecars, one JSON value per line
+aligned with the ledger's entries:
+
+- ``ledger-<LLLLLLLL>.keys`` — the message key (``null`` = unkeyed),
+  read by compacted fetches;
+- ``ledger-<LLLLLLLL>.pts`` — the publish time in µs (``null`` =
+  unstamped), read by timestamp seeks.
+
+One read per ledger: every method derives its answer from one scan that
+reads each ledger file (and, when asked, one sidecar) exactly once, so
+an offset can never point past the bytes it was read from, even while a
+writer appends. Lines are split on ``b"\n"`` only, and an unterminated
+last line is an append still in flight: it stays invisible until its
+newline lands.
 
 Semantics replicated from the reference consumer
 (`SRC/PulsarPartitionLevelConsumer.java`):
@@ -35,10 +49,11 @@ import os
 import re
 from bisect import bisect_left
 from dataclasses import dataclass
+from itertools import islice
+from operator import itemgetter
 
 from pinot_pulsar_plugin_spark.sources.offsets import (
     EARLIEST_OFFSET,
-    decode_offset,
     encode_offset,
 )
 
@@ -47,6 +62,31 @@ DEFAULT_MAX_BYTES = 10 * 1024 * 1024  # consumer.maxBytes default, StreamConfig:
 
 _LEDGER_RE = re.compile(r"ledger-(\d+)\.jsonl$")
 _PART_RE = re.compile(r"partition-(\d+)$")
+# \n is the ledger delimiter; the other bytes are rejected too so ledgers
+# stay safe even for tools that split with splitlines()
+LINE_BOUNDARY = re.compile(rb"[\n\r\x0b\x0c\x1c\x1d\x1e]")
+# value of every entry of a ledger whose sidecar is missing or misaligned
+_UNALIGNED = object()
+
+
+def _lines(path: str) -> list[bytes]:
+    """The complete lines of a ledger or sidecar file, from one read.
+    Splits on b"\n" only: splitlines() would also split on \r, \v, \f
+    and \x1c-\x1e and misalign entries for payloads holding those
+    bytes. The last piece is dropped: it is empty after the trailing
+    newline, or an append whose newline has not landed yet."""
+    with open(path, "rb") as fh:
+        lines = fh.read().split(b"\n")
+    lines.pop()
+    return lines
+
+
+def _is_key(key: object) -> bool:
+    return key is not None and key is not _UNALIGNED
+
+
+def _next_position(msgs: list) -> int:
+    return msgs[-1][0] + 1 if msgs else 0
 
 
 @dataclass(frozen=True)
@@ -95,110 +135,54 @@ class FakePulsarBroker:
             return []
         return sorted(out)
 
-    def _offsets_index(self, topic: str, partition: int) -> list[tuple[int, str, int]]:
-        """Sorted (offset, ledger_path, line_no) triples for a partition."""
-        idx: list[tuple[int, str, int]] = []
+    def _scan(
+        self, topic: str, partition: int, sidecar: str | None = None
+    ) -> list[tuple[int, bytes, object]]:
+        """Sorted ``(offset, payload, value)`` for every message of a
+        partition, from ONE read of each ledger.
+
+        ``value`` comes from the ledger's ``sidecar`` (``"keys"`` or
+        ``"pts"``), one JSON value per line aligned with the ledger's
+        entries, or is None when no sidecar is asked for. A missing
+        sidecar, or one whose line count differs from its ledger's
+        (truncated, partially written or tampered with), would silently
+        shift the value→offset alignment, so every entry of that ledger
+        gets ``_UNALIGNED`` instead (ADVICE r2, ADVICE r6 #3).
+
+        Sorted by offset, not by ledger id, so ledger ids that wrap the
+        i64 codec keep the order every other method sees."""
+        pdir = self._partition_dir(topic, partition)
+        out: list[tuple[int, bytes, object]] = []
         for ledger in self._ledgers(topic, partition):
-            path = os.path.join(
-                self._partition_dir(topic, partition), f"ledger-{ledger:08d}.jsonl"
-            )
-            with open(path, "rb") as fh:
-                for entry, _ in enumerate(fh):
-                    idx.append((encode_offset(ledger, entry), path, entry))
-        idx.sort(key=lambda x: x[0])
-        return idx
+            stem = os.path.join(pdir, f"ledger-{ledger:08d}")
+            payloads = _lines(stem + ".jsonl")
+            values: list = [None] * len(payloads)
+            if sidecar is not None:
+                try:
+                    raw = _lines(f"{stem}.{sidecar}")
+                except OSError:
+                    raw = None
+                if raw is not None and len(raw) == len(payloads):
+                    values = [json.loads(v) for v in raw]
+                else:
+                    values = [_UNALIGNED] * len(payloads)
+            for entry, (payload, value) in enumerate(zip(payloads, values)):
+                out.append((encode_offset(ledger, entry), payload, value))
+        out.sort(key=itemgetter(0))
+        return out
 
     def earliest_offset(self, topic: str, partition: int) -> int:
         """Offset of the first message (≡ MessageId.earliest resolution,
         PulsarStreamMetadataProvider.java:72-74)."""
-        idx = self._offsets_index(topic, partition)
-        return idx[0][0] if idx else 0
+        msgs = self._scan(topic, partition)
+        return msgs[0][0] if msgs else 0
 
     def latest_offset(self, topic: str, partition: int) -> int:
         """One past the last message — the next position a new message
         would take (≡ MessageId.latest, provider:70-71)."""
-        idx = self._offsets_index(topic, partition)
-        return idx[-1][0] + 1 if idx else 0
+        return _next_position(self._scan(topic, partition))
 
     # ---- data plane (partition consumer parity) ----
-
-    def _keys_index(self, topic: str, partition: int) -> dict[int, str | None]:
-        """offset → message key (None when unkeyed / no sidecar). Keys
-        live in ``ledger-<L>.keys`` sidecars, one JSON-encoded key per
-        line, aligned with the ledger's entries."""
-        keys: dict[int, str | None] = {}
-        # per-ledger entry counts come from the offsets index (already
-        # one line-scan per ledger) instead of re-reading every .jsonl
-        # here — _keys_index runs on each compacted fetch, so counting
-        # again doubled the ledger I/O (ADVICE r3)
-        entry_counts: dict[str, int] = {}
-        for _, path, _ in self._offsets_index(topic, partition):
-            entry_counts[path] = entry_counts.get(path, 0) + 1
-        for ledger in self._ledgers(topic, partition):
-            pdir = self._partition_dir(topic, partition)
-            kpath = os.path.join(pdir, f"ledger-{ledger:08d}.keys")
-            try:
-                with open(kpath, "rb") as fh:
-                    lines = fh.read().split(b"\n")
-                    if lines and lines[-1] == b"":
-                        lines.pop()
-            except OSError:
-                continue
-            # A truncated / partially written sidecar would silently
-            # shift the key→offset alignment and compaction would hide
-            # the WRONG messages; require exact line alignment with the
-            # ledger and treat the ledger as unkeyed otherwise
-            # (ADVICE r2).
-            lpath = os.path.join(pdir, f"ledger-{ledger:08d}.jsonl")
-            if len(lines) != entry_counts.get(lpath, 0):
-                continue
-            for entry, raw in enumerate(lines):
-                keys[encode_offset(ledger, entry)] = json.loads(raw)
-        return keys
-
-    def _pts_index(
-        self, topic: str, partition: int
-    ) -> tuple[dict[int, int | None], set[int]]:
-        """(offset → publish timestamp µs, untrusted offsets).
-
-        Publish times live in ``ledger-<L>.pts`` sidecars, one JSON int
-        (or ``null`` = the writer deliberately did not stamp) per line,
-        aligned with the ledger's entries. A MISSING or MISALIGNED
-        sidecar is different from a null stamp: TopicWriter always
-        writes a .pts line per entry, so misalignment means the sidecar
-        was truncated or tampered with and NOTHING in that ledger has a
-        trustworthy publish time. Those offsets go in the ``untrusted``
-        set instead of being silently treated as unstamped — the old
-        treat-as-unstamped behavior made a timestamp seek position PAST
-        corrupt ledgers and skip their data, the opposite failure
-        direction from the real broker, which always stamps broker-side
-        and whose ms-grain seek only ever lands early (ADVICE r6 #3 /
-        VERDICT r7 #4)."""
-        pts: dict[int, int | None] = {}
-        untrusted: set[int] = set()
-        entry_counts: dict[str, int] = {}
-        ledger_offsets: dict[int, list[int]] = {}
-        for off, path, _ in self._offsets_index(topic, partition):
-            entry_counts[path] = entry_counts.get(path, 0) + 1
-            ledger_offsets.setdefault(decode_offset(off)[0], []).append(off)
-        for ledger in self._ledgers(topic, partition):
-            pdir = self._partition_dir(topic, partition)
-            tpath = os.path.join(pdir, f"ledger-{ledger:08d}.pts")
-            lpath = os.path.join(pdir, f"ledger-{ledger:08d}.jsonl")
-            try:
-                with open(tpath, "rb") as fh:
-                    lines = fh.read().split(b"\n")
-                    if lines and lines[-1] == b"":
-                        lines.pop()
-            except OSError:
-                untrusted.update(ledger_offsets.get(ledger, ()))
-                continue
-            if len(lines) != entry_counts.get(lpath, 0):
-                untrusted.update(ledger_offsets.get(ledger, ()))
-                continue
-            for entry, raw in enumerate(lines):
-                pts[encode_offset(ledger, entry)] = json.loads(raw)
-        return pts, untrusted
 
     def first_offset_at_or_after(self, topic: str, partition: int, ts_us: int) -> int:
         """Publish-time seek: the offset of the first message with
@@ -210,35 +194,20 @@ class FakePulsarBroker:
         missing or misaligned are UNTRUSTED and qualify unconditionally
         — the seek lands at or before them (at-least-once, the same
         never-skip direction as the real client's millisecond-floored
-        seek), never past them. If nothing qualifies, returns
-        ``latest_offset`` (the position the next published message
-        would take — seek-to-future lands at the live edge). Publish
-        times are monotonic per partition (the Pulsar broker stamps
-        them in append order), so the first qualifying offset in index
-        order is THE boundary."""
-        pts, untrusted = self._pts_index(topic, partition)
-        for off, _, _ in self._offsets_index(topic, partition):
-            if off in untrusted:
+        seek), never past them: TopicWriter always writes a .pts line
+        per entry, so a misaligned sidecar means NOTHING in that ledger
+        has a trustworthy publish time, and treating it as unstamped
+        would skip its data (VERDICT r7 #4). If nothing qualifies,
+        returns ``latest_offset`` (the position the next published
+        message would take — seek-to-future lands at the live edge).
+        Publish times are monotonic per partition (the Pulsar broker
+        stamps them in append order), so the first qualifying offset in
+        offset order is THE boundary."""
+        msgs = self._scan(topic, partition, "pts")
+        for off, _, ts in msgs:
+            if ts is _UNALIGNED or (ts is not None and ts >= ts_us):
                 return off
-            t = pts.get(off)
-            if t is not None and t >= ts_us:
-                return off
-        return self.latest_offset(topic, partition)
-
-    def _superseded(self, topic: str, partition: int) -> set[int]:
-        """Offsets hidden by compaction: keyed messages with a later
-        message (higher offset) carrying the same key. Unkeyed messages
-        are never compacted away."""
-        latest: dict[str, int] = {}
-        keys = self._keys_index(topic, partition)
-        for off, key in keys.items():
-            if key is not None and off > latest.get(key, -(1 << 62)):
-                latest[key] = off
-        return {
-            off
-            for off, key in keys.items()
-            if key is not None and latest[key] != off
-        }
+        return _next_position(msgs)
 
     def fetch(
         self,
@@ -263,41 +232,29 @@ class FakePulsarBroker:
         message per key, unkeyed messages untouched — matching the
         reference's source-level ``readCompacted(true)`` subscription
         (PulsarPartitionLevelConsumer.java:68). Offsets are unchanged;
-        superseded messages are simply not delivered.
+        superseded messages are simply not delivered. Entries of a
+        ledger whose ``.keys`` sidecar is unaligned count as unkeyed.
         """
+        msgs = self._scan(topic, partition, "keys" if compacted else None)
+        latest: dict = {}  # key -> its highest offset (msgs is sorted)
+        for off, _, key in msgs:
+            if _is_key(key):
+                latest[key] = off
         if start_offset == EARLIEST_OFFSET:
-            start_offset = self.earliest_offset(topic, partition)
-        idx = self._offsets_index(topic, partition)
-        offsets = [o for o, _, _ in idx]
-        pos = bisect_left(offsets, start_offset)  # first msg offset >= start
-        hidden = self._superseded(topic, partition) if compacted else set()
+            pos = 0
+        else:  # first msg offset >= start
+            pos = bisect_left(msgs, start_offset, key=itemgetter(0))
         out: list[FetchedMessage] = []
         nbytes = 0
-        by_file: dict[str, list[str]] = {}
-        while pos < len(idx) and len(out) < max_msgs:
-            offset, path, line_no = idx[pos]
-            if end_offset is not None and offset >= end_offset:
+        for offset, payload, key in islice(msgs, pos, None):
+            if len(out) >= max_msgs or (end_offset is not None and offset >= end_offset):
                 break
-            if offset in hidden:
-                pos += 1
-                continue
-            if path not in by_file:
-                # split on b"\n" only — the same delimiter
-                # _offsets_index counts entries by (iterating a binary
-                # file yields \n-terminated lines); splitlines() would
-                # also split on \r, \v, \f, \x1c-\x1e and misalign line
-                # numbers for payloads containing those bytes
-                with open(path, "rb") as fh:
-                    lines = fh.read().split(b"\n")
-                    if lines and lines[-1] == b"":
-                        lines.pop()  # trailing newline
-                    by_file[path] = lines
-            payload = by_file[path][line_no]
+            if _is_key(key) and latest[key] != offset:
+                continue  # superseded by a later message with this key
             if out and nbytes + len(payload) > max_bytes:
                 break
-            out.append(FetchedMessage(offset, bytes(payload)))
+            out.append(FetchedMessage(offset, payload))
             nbytes += len(payload)
-            pos += 1
         return out
 
     def acknowledge_cumulative(self, topic: str, partition: int, offset: int) -> bool:
@@ -365,9 +322,7 @@ class TopicWriter:
         as predating every seek target)."""
         if isinstance(payload, str):
             payload = payload.encode("utf-8")
-        # \n is the ledger delimiter; the other bytes are rejected too so
-        # fixtures stay safe even for tools that use splitlines()
-        if any(ch in payload for ch in (b"\n", b"\r", b"\x0b", b"\x0c", b"\x1c", b"\x1d", b"\x1e")):
+        if LINE_BOUNDARY.search(payload):
             raise ValueError(
                 "jsonl fake broker: payload may not contain line-boundary bytes"
             )

@@ -61,20 +61,12 @@ from pyspark.sql.datasource import (
 from pinot_pulsar_plugin_spark.sources.fakebroker import (
     DEFAULT_MAX_BYTES,
     DEFAULT_MAX_MSGS,
+    LINE_BOUNDARY,
     FakePulsarBroker,
 )
 from pinot_pulsar_plugin_spark.sources.offsets import EARLIEST_OFFSET
 
 SCHEMA = "value binary, offset bigint, partition int"
-
-
-def _debug(msg: str) -> None:
-    """Reader methods run inside Spark's python-source worker process;
-    set PULSARLIKE_DEBUG_LOG=<file> to trace the offset protocol."""
-    path = os.environ.get("PULSARLIKE_DEBUG_LOG")
-    if path:
-        with open(path, "a") as fh:
-            fh.write(msg + "\n")
 
 
 @dataclass
@@ -210,6 +202,16 @@ def _offset_for(given: dict[str, int] | None, p: int) -> int | None:
     return given.get(str(p), given.get("*"))
 
 
+def _start_offset(
+    broker: FakePulsarBroker, topic: str, p: int, starting: dict[str, int] | None
+) -> int:
+    """Earliest, moved forward to an explicit starting offset (never
+    back: a start before earliest reads from earliest)."""
+    pos = broker.earliest_offset(topic, p)
+    given = _offset_for(starting, p)
+    return pos if given is None else max(pos, given)
+
+
 def ts_option(options: dict, key: str) -> int | None:
     """Publish-timestamp option (µs): Pulsar ``Consumer.seek(long)`` /
     Kafka ``startingTimestamp`` parity. Like offsets_option, garbage
@@ -311,10 +313,7 @@ class PulsarLikeStreamReader(DataSourceStreamReader):
         # earliest) — never skips data.
         self._current: dict[str, int] = {}
         for p in range(self.n_parts):
-            pos = self.broker.earliest_offset(self.topic, p)
-            given = _offset_for(self.starting, p)
-            if given is not None:
-                pos = max(pos, given)
+            pos = _start_offset(self.broker, self.topic, p, self.starting)
             acked = self.broker.acked_through(self.topic, p)
             if acked is not None:
                 pos = max(pos, acked + 1)
@@ -323,15 +322,10 @@ class PulsarLikeStreamReader(DataSourceStreamReader):
     # EP2: OffsetCriteria.smallest → earliest (provider:72-74); the
     # subscription itself starts Earliest (consumer:64).
     def initialOffset(self) -> dict:
-        start = {}
-        for p in range(self.n_parts):
-            pos = self.broker.earliest_offset(self.topic, p)
-            given = _offset_for(self.starting, p)
-            if given is not None:
-                pos = max(pos, given)
-            start[str(p)] = pos
-        _debug(f"initialOffset -> {start}")
-        return start
+        return {
+            str(p): _start_offset(self.broker, self.topic, p, self.starting)
+            for p in range(self.n_parts)
+        }
 
     def latestOffset(self) -> dict:
         out = {}
@@ -341,7 +335,6 @@ class PulsarLikeStreamReader(DataSourceStreamReader):
                 self.topic, p, cur, max_msgs=self.max_msgs, max_bytes=self.max_bytes
             )
             out[str(p)] = batch[-1].next_offset if batch else cur
-        _debug(f"latestOffset cur={self._current} -> {out}")
         # self-advance: bounds the next offer even if Spark skips
         # planning this range (restart ramp-up; see __init__ note)
         self._current = dict(out)
@@ -359,7 +352,6 @@ class PulsarLikeStreamReader(DataSourceStreamReader):
             e = int(end.get(p, EARLIEST_OFFSET))
             cur[p] = max(cur.get(p, EARLIEST_OFFSET), s, e)
         self._current = cur
-        _debug(f"partitions {start} {end}")
         return [
             _Range(
                 self.root, self.topic, int(p), int(start[p]),
@@ -422,11 +414,8 @@ class PulsarLikeBatchReader(DataSourceReader):
         n = self.broker.partition_count(self.topic)
         out = []
         for p in range(n):
-            start = self.broker.earliest_offset(self.topic, p)
+            start = _start_offset(self.broker, self.topic, p, self.starting)
             end = self.broker.latest_offset(self.topic, p)
-            given_s = _offset_for(self.starting, p)
-            if given_s is not None:
-                start = max(start, given_s)
             given_e = _offset_for(self.ending, p)
             if given_e is not None:
                 end = min(end, given_e)
@@ -481,10 +470,7 @@ def _stage_task_rows(
                 kf = open(stem + ".keys.tmp", "wb")
                 handles[part] = (lf, kf)
                 tmp_paths += [stem + ".jsonl.tmp", stem + ".keys.tmp"]
-            if any(
-                ch in payload
-                for ch in (b"\n", b"\r", b"\x0b", b"\x0c", b"\x1c", b"\x1d", b"\x1e")
-            ):
+            if LINE_BOUNDARY.search(payload):
                 raise ValueError("payload may not contain line-boundary bytes")
             lf, kf = handles[part]
             lf.write(payload + b"\n")
@@ -494,6 +480,19 @@ def _stage_task_rows(
             lf.close()
             kf.close()
     return _LedgerCommit(tmp_paths=tuple(tmp_paths))
+
+
+def _next_ledger(root: str, topic: str, n_parts: int) -> int:
+    """First ledger id past every existing ledger of the topic. Writer
+    task ledgers (base + taskAttemptId) start here, so a write never
+    touches an existing ledger."""
+    broker = FakePulsarBroker(root)
+    existing = 0
+    for p in range(max(n_parts, broker.partition_count(topic))):
+        led = broker._ledgers(topic, p)
+        if led:
+            existing = max(existing, led[-1] + 1)
+    return existing
 
 
 def _finalize_staged(messages) -> None:
@@ -537,13 +536,7 @@ class PulsarLikeBatchWriter(DataSourceWriter):
         self.root = _required_path(options)
         self.topic = _lookup(options, "topic") or "topic"
         self.n_parts = max(1, int_option(options, "partitions", 1))
-        broker = FakePulsarBroker(self.root)
-        existing = 0
-        for p in range(max(self.n_parts, broker.partition_count(self.topic))):
-            led = broker._ledgers(self.topic, p)
-            if led:
-                existing = max(existing, led[-1] + 1)
-        self.base_ledger = existing
+        self.base_ledger = _next_ledger(self.root, self.topic, self.n_parts)
 
     def write(self, iterator) -> _LedgerCommit:
         return _stage_task_rows(self.root, self.topic, self.n_parts, self.base_ledger, iterator)
@@ -568,13 +561,7 @@ class PulsarLikeStreamWriter(DataSourceStreamWriter):
         self.root = _required_path(options)
         self.topic = _lookup(options, "topic") or "topic"
         self.n_parts = max(1, int_option(options, "partitions", 1))
-        broker = FakePulsarBroker(self.root)
-        existing = 0
-        for p in range(max(self.n_parts, broker.partition_count(self.topic))):
-            led = broker._ledgers(self.topic, p)
-            if led:
-                existing = max(existing, led[-1] + 1)
-        self.base_ledger = existing
+        self.base_ledger = _next_ledger(self.root, self.topic, self.n_parts)
 
     def write(self, iterator) -> _LedgerCommit:
         return _stage_task_rows(

@@ -3,9 +3,9 @@
 The ``pulsar-client`` package is not installed in this environment
 (import-gated by design, SURVEY.md §7 phase 3b: "optional real
 pulsar-client behind the same interface so CI needs no broker"). When
-it is available, :class:`RealPulsarBroker` satisfies the same five
-methods the pulsarlike source consumes, mapping each to the Pulsar
-reader API the reference plugin uses:
+it is available, :class:`RealPulsarBroker` implements the broker
+methods the pulsarlike source calls, mapping each to the Pulsar reader
+API the reference plugin uses:
 
 - ``partition_count``      → ``get_topic_partitions``
   (≈ getPartitionsForTopic, PulsarStreamMetadataProvider.java:53)
@@ -13,9 +13,16 @@ reader API the reference plugin uses:
   offset codec (provider:66-78)
 - ``fetch``                → reader.seek + bounded read_next loop
   (≈ batchReceive under BatchReceivePolicy, consumer:69-73,136)
+- ``first_offset_at_or_after`` → reader.seek(publish time in ms)
 - ``acknowledge_cumulative`` → no-op: readers are non-durable, which is
   the reference's own design (NonDurable subscription, consumer:66 —
   the engine checkpoint owns the cursor either way)
+
+pulsarlike also calls ``acked_through`` (the stream reader's restart
+cursor, read from the fake broker's ack sidecar), which this class
+does not implement: a non-durable reader keeps no acked position. The
+writers' ledger numbering reads the fake broker's ledger files and has
+no real-broker counterpart.
 """
 
 from __future__ import annotations
@@ -44,8 +51,8 @@ class RealPulsarBroker:
     """Drop-in for FakePulsarBroker against a real cluster.
 
     ``root`` is the service URL (e.g. ``pulsar://host:6650``) instead of
-    a directory; everything else keeps the same signatures so
-    ``pulsarlike`` can swap brokers via an option.
+    a directory; every method listed in the module docstring keeps
+    FakePulsarBroker's signature.
     """
 
     def __init__(self, service_url: str):

@@ -9,6 +9,7 @@ import pytest
 from pinot_pulsar_plugin_spark.sources.fakebroker import FakePulsarBroker, TopicWriter
 from pinot_pulsar_plugin_spark.sources.offsets import (
     EARLIEST_OFFSET,
+    decode_offset,
     encode_offset,
 )
 
@@ -97,8 +98,8 @@ def test_ack_best_effort(topic):
 
 
 def test_payload_with_carriage_return_keeps_alignment(tmp_path):
-    """fetch() splits ledgers on b"\\n" only — the same delimiter
-    _offsets_index counts by. A payload containing \\r (or \\v, \\f,
+    """The broker splits ledgers on b"\\n" only, so offsets and payloads
+    come from the same lines. A payload containing \\r (or \\v, \\f,
     \\x1c-\\x1e) written by an external tool must not shift line numbers
     for later entries (splitlines() would)."""
     pdir = tmp_path / "t" / "partition-0"
@@ -357,3 +358,91 @@ def test_timestamp_range_resolution_random(seed, tmp_path):
                                          max_msgs=10_000)]
         want = [off for off, pts, _ in truth if s <= pts < e]
         assert got == want, (seed, s - T0, e - T0, got, want)
+
+
+def test_wrapped_ledger_ids_compaction_and_seek(tmp_path):
+    """Ledger ids whose packed offsets wrap the i64 codec: from 2^35 the
+    offsets fall below -2^62, and from 2^36 they alias small ledger ids
+    when decoded. Compaction still keeps the latest message per key,
+    and a timestamp seek still lands at or before a ledger whose .pts
+    sidecar is missing."""
+    T0 = 1_700_000_000_000_000
+    w = TopicWriter(str(tmp_path), "t", partitions=1, rollover_every=2)
+    w.set_ledger(0, (1 << 35) + 1)
+    offs = [w.append(0, b'{"i":%d}' % i, key="k", publish_ts=T0 + i) for i in range(2)]
+    w.set_ledger(0, (1 << 36) + 1)
+    offs += [w.append(0, b'{"i":%d}' % i, publish_ts=T0 + i) for i in range(2, 5)]
+    assert offs == sorted(offs) and offs[0] < -(1 << 62)
+    b = FakePulsarBroker(str(tmp_path))
+
+    msgs = b.fetch("t", 0, EARLIEST_OFFSET, compacted=True)
+    assert [m.offset for m in msgs] == [offs[1]] + offs[2:]
+
+    (tmp_path / "t" / "partition-0" / f"ledger-{(1 << 36) + 1:08d}.pts").unlink()
+    assert b.first_offset_at_or_after("t", 0, T0 + 3) == offs[2]
+
+
+_STRESS_ROLLOVER = 7
+
+
+def _stress_payload(i: int) -> bytes:
+    """Message ``i`` of the stress writer. Every 5th payload is over
+    4 KiB, so one append spans pages and a reader can see it half
+    written."""
+    size = 4097 + (i * 611) % 8192 if i % 5 == 0 else 1 + (i * 37) % 300
+    return b'{"i":%d,"pad":"%s"}' % (i, b"x" * size)
+
+
+def _stress_writer(root: str, n: int) -> None:
+    import time
+
+    w = TopicWriter(root, "s", partitions=1, rollover_every=_STRESS_ROLLOVER)
+    for i in range(n):
+        off = w.append(0, _stress_payload(i), key=f"k{i % 3}" if i % 2 else None)
+        assert off == encode_offset(i // _STRESS_ROLLOVER, i % _STRESS_ROLLOVER)
+        time.sleep(0.0005)
+
+
+def test_fetch_during_concurrent_appends(tmp_path):
+    """While another process appends (ledgers of 7 entries, payloads up
+    to 12 KiB), plain and compacted fetches from earliest never raise,
+    return strictly increasing offsets, and return for each offset
+    exactly the payload written at it. A plain fetch is always a prefix
+    of what was written: a ledger is read once, and an append whose
+    newline has not landed is not yet visible."""
+    import multiprocessing
+    import time
+
+    n = 3000
+    writer = multiprocessing.get_context("spawn").Process(
+        target=_stress_writer, args=(str(tmp_path), n), daemon=True
+    )
+    writer.start()
+    b = FakePulsarBroker(str(tmp_path))
+    deadline = time.monotonic() + 60
+    seen = []
+    try:
+        while time.monotonic() < deadline:
+            done = not writer.is_alive()
+            for compacted in (False, True):
+                msgs = b.fetch("s", 0, EARLIEST_OFFSET, max_msgs=n,
+                               max_bytes=1 << 40, compacted=compacted)
+                offs = [m.offset for m in msgs]
+                assert all(x < y for x, y in zip(offs, offs[1:]))
+                for m in msgs:
+                    ledger, entry = decode_offset(m.offset)
+                    assert m.payload == _stress_payload(ledger * _STRESS_ROLLOVER + entry)
+                if not compacted:
+                    assert offs == [
+                        encode_offset(i // _STRESS_ROLLOVER, i % _STRESS_ROLLOVER)
+                        for i in range(len(offs))
+                    ]
+                    seen.append(len(msgs))
+            if done:
+                break
+    finally:
+        writer.join(timeout=30)
+    assert not writer.is_alive()
+    assert writer.exitcode == 0
+    assert seen[-1] == n
+    assert len(set(seen)) > 2  # fetches really ran during the appends

@@ -945,7 +945,7 @@ def test_fuzz_writer_round_trip(seed, spark, tmp_path):
     for part in range(n_parts):
         latest = {}
         unkeyed = []
-        for off, key in sorted(b._keys_index("out", part).items()):
+        for off, _, key in b._scan("out", part, "keys"):
             if key is None:
                 unkeyed.append(off)
             else:
