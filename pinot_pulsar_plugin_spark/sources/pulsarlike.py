@@ -7,16 +7,23 @@ Shape of the mapping (SURVEY.md §3):
   (PulsarStreamMetadataProvider.java:51-58)
 - EP2 offset resolution    → ``initialOffset()`` (earliest ≡ the
   Earliest-position subscription, PulsarPartitionLevelConsumer.java:64)
-- EP3 fetch loop           → Spark's micro-batch cycle:
-  ``latestOffset()`` bounds admission (≈ BatchReceivePolicy
-  maxMsgs/maxBytes, consumer:69-73), ``partitions(start, end)`` plans
-  one InputPartition per topic partition (consumer:58 — partitions are
-  fully independent), executors ``read()`` their partition
-  (≈ batchReceive + wrap, consumer:136-147), ``commit(end)`` issues the
-  best-effort cumulative ack (consumer:154-162) while real progress
-  lives in Spark's checkpoint WAL — exactly the reference's
+- EP3 fetch loop           → Spark's micro-batch cycle, with the
+  reference's one read per message (fetchMessages returns the batch its
+  batchReceive just read, consumer:88-166): ``PulsarLikePrefetchReader``
+  is the reader Spark calls. Its ``read(start)`` runs the admission
+  fetch (≈ BatchReceivePolicy maxMsgs/maxBytes, consumer:69-73) on the
+  driver and returns the admitted messages with the end offset; Spark
+  sends them to the JVM while it plans the micro-batch, and the executor
+  task reads that cached block, with no Python worker. Restart replays
+  and cache misses go through ``readBetweenOffsets(start, end)``, which
+  plans one range per topic partition (consumer:58 — partitions are
+  fully independent) and reads them with ``_read_range``. ``commit(end)``
+  issues the best-effort cumulative ack (consumer:154-162) while real
+  progress lives in Spark's checkpoint WAL — exactly the reference's
   NonDurable-subscription design ("anyway it's pinot that choose the
-  cursor", consumer:157).
+  cursor", consumer:157). ``PulsarLikeStreamReader`` holds the offset
+  protocol (cursor, admission, planning, ack) that the prefetch reader
+  delegates to.
 
 Output rows are ``(value: binary, offset: long, partition: int)`` — the
 wire shape of MessageAndOffset (MessageAndOffset.java:26-27) inside a
@@ -30,16 +37,17 @@ Deliberate improvements over the reference, enabled by Spark's model:
 
 Restart behavior: the reader recovers its admission cursor from the
 commit-time ack sidecar (its own monotonic high-water mark), so after a
-restart ``latestOffset()`` resumes offering cap-sized batches FROM the
+restart admission resumes offering cap-sized batches FROM the
 committed position — it can never offer an offset behind the
 checkpoint, even when the backlog exceeds maxMsgs/maxBytes.
 ``partitions()`` additionally snaps the cursor to every planned range
 and clamps ranges to start <= end, covering stale/failed ack writes.
 
-At 100 TB scale: one InputPartition per topic partition gives the same
-partition-parallel, coordination-free scan as the reference (1000
-executors ↔ 1000+ topic partitions); admission control bounds per-batch
-memory exactly like BatchReceivePolicy.
+Memory: the driver's Python source process holds each admitted batch
+until Spark commits it, at most partitions × ``maxBytes`` — bytes that
+admission has already read on the driver. Messages cross to the JVM
+once, from the driver, instead of being read again by one executor task
+per topic partition.
 """
 
 from __future__ import annotations
@@ -55,6 +63,7 @@ from pyspark.sql.datasource import (
     DataSourceStreamWriter,
     DataSourceWriter,
     InputPartition,
+    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
@@ -79,25 +88,34 @@ class _Range(InputPartition):
     compacted: bool = False
 
 
-def _read_range(rng: _Range) -> Iterator:
-    """Executor-side scan of one partition's offset range. Loops the
-    bounded fetch (the reference's one-batchReceive-per-call shape,
-    consumer:136) until the range is exhausted. With ``compacted`` the
-    fetch serves the compacted view (latest message per key), matching
-    the reference's readCompacted(true) subscription (consumer:68) —
-    offset PLANNING stays on raw offsets; compaction only affects which
-    messages the executor delivers.
-
-    Yields one ``pyarrow.RecordBatch`` per fetch (the Python DataSource
-    vectorized path): the whole micro-fetch crosses the Python→JVM
-    boundary as one Arrow batch instead of N pickled tuples — the
+def _arrow_batch(msgs: Sequence, partition: int):
+    """One fetch as one ``pyarrow.RecordBatch`` of ``SCHEMA`` — the
     PulsarMessageBatch container (PulsarMessageBatch.java:38-60)
     re-expressed as a columnar batch."""
     import pyarrow as pa
 
-    schema = pa.schema(
-        [("value", pa.binary()), ("offset", pa.int64()), ("partition", pa.int32())]
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([m.payload for m in msgs], pa.binary()),
+            pa.array([m.offset for m in msgs], pa.int64()),
+            pa.array([partition] * len(msgs), pa.int32()),
+        ],
+        names=["value", "offset", "partition"],
     )
+
+
+def _read_range(rng: _Range) -> Iterator:
+    """Scan of one partition's offset range. Loops the bounded fetch
+    (the reference's one-batchReceive-per-call shape, consumer:136)
+    until the range is exhausted. With ``compacted`` the fetch serves
+    the compacted view (latest message per key), matching the
+    reference's readCompacted(true) subscription (consumer:68) — offset
+    PLANNING stays on raw offsets; compaction only affects which
+    messages are delivered.
+
+    Yields one ``pyarrow.RecordBatch`` per fetch (the Python DataSource
+    vectorized path): the whole micro-fetch crosses the Python→JVM
+    boundary as one Arrow batch instead of N pickled tuples."""
     broker = FakePulsarBroker(rng.root)
     pos = rng.start
     while pos < rng.end:
@@ -106,14 +124,7 @@ def _read_range(rng: _Range) -> Iterator:
         )
         if not batch:
             break
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([m.payload for m in batch], pa.binary()),
-                pa.array([m.offset for m in batch], pa.int64()),
-                pa.array([rng.partition] * len(batch), pa.int32()),
-            ],
-            schema=schema,
-        )
+        yield _arrow_batch(batch, rng.partition)
         pos = batch[-1].next_offset
 
 
@@ -327,18 +338,24 @@ class PulsarLikeStreamReader(DataSourceStreamReader):
             for p in range(self.n_parts)
         }
 
-    def latestOffset(self) -> dict:
-        out = {}
+    def _admit(self) -> tuple[dict, dict]:
+        """Admission from the cursor: the capped end offset of every
+        partition and the messages fetched to find it."""
+        out, fetched = {}, {}
         for p in range(self.n_parts):
             cur = self._current[str(p)]
             batch = self.broker.fetch(
                 self.topic, p, cur, max_msgs=self.max_msgs, max_bytes=self.max_bytes
             )
             out[str(p)] = batch[-1].next_offset if batch else cur
+            fetched[str(p)] = batch
         # self-advance: bounds the next offer even if Spark skips
         # planning this range (restart ramp-up; see __init__ note)
         self._current = dict(out)
-        return out
+        return out, fetched
+
+    def latestOffset(self) -> dict:
+        return self._admit()[0]
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         # Planning tells us the engine's cursor — keep it (restart
@@ -374,6 +391,51 @@ class PulsarLikeStreamReader(DataSourceStreamReader):
 
     def stop(self) -> None:  # connection lifecycle (connhandler:57-63)
         pass
+
+
+class PulsarLikePrefetchReader(SimpleDataSourceStreamReader):
+    """The stream reader Spark calls: admission and read in one fetch,
+    like the reference's fetchMessages, which returns the batch its
+    batchReceive just read (consumer:88-166).
+
+    ``read(start)`` runs :class:`PulsarLikeStreamReader`'s admission and
+    returns the admitted messages as Arrow batches with the end offset.
+    Spark sends them to the JVM while it plans the micro-batch, so the
+    executor task reads a cached block and starts no Python worker.
+    ``readBetweenOffsets`` serves restart replays and cache misses."""
+
+    def __init__(self, options: dict):
+        self.stream = PulsarLikeStreamReader(options)
+
+    def initialOffset(self) -> dict:
+        return self.stream.initialOffset()
+
+    def read(self, start: dict) -> tuple[Iterator, dict]:
+        stream = self.stream
+        # Never admit behind Spark's start (a replayed batch the ack
+        # sidecar does not cover yet).
+        stream.partitions(start, start)
+        ahead = {p for p in start if stream._current[p] != int(start[p])}
+        end, fetched = stream._admit()
+        batches = []
+        for rng in stream.partitions(start, end):
+            p = str(rng.partition)
+            # The admitted messages are exactly [start, end) only when
+            # admission began at start and delivers raw offsets. An
+            # ack-recovered cursor ahead of start (a fresh checkpoint
+            # over an acked topic) or a compacted view reads the range.
+            if rng.compacted or p in ahead:
+                batches.extend(_read_range(rng))
+            elif fetched[p]:
+                batches.append(_arrow_batch(fetched[p], rng.partition))
+        return iter(batches), end
+
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
+        for rng in self.stream.partitions(start, end):
+            yield from _read_range(rng)
+
+    def commit(self, end: dict) -> None:
+        self.stream.commit(end)
 
 
 class PulsarLikeBatchReader(DataSourceReader):
@@ -601,8 +663,10 @@ class PulsarLikeDataSource(DataSource):
     def streamWriter(self, schema, overwrite: bool) -> DataSourceStreamWriter:
         return PulsarLikeStreamWriter(self.options)
 
-    def streamReader(self, schema) -> DataSourceStreamReader:
-        return PulsarLikeStreamReader(self.options)
+    # No streamReader: Spark takes the prefetch path only for a source
+    # that defines simpleStreamReader alone.
+    def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
+        return PulsarLikePrefetchReader(self.options)
 
 
 def _ship_package(spark) -> None:
@@ -610,28 +674,40 @@ def _ship_package(spark) -> None:
     DataSource class is unpickled there by reference). On a real cluster
     the package would be pip-installed on executors; ``addPyFile`` of a
     package zip is the self-contained equivalent and also covers the
-    driver-side planning workers."""
+    driver-side planning workers.
+
+    The zip is named by a hash of the package's ``.py`` bytes, so a
+    process never ships a zip that an older checkout built: workers put
+    it ahead of ``PYTHONPATH`` on ``sys.path``."""
+    import hashlib
     import tempfile
     import zipfile
 
     import pinot_pulsar_plugin_spark as pkg
 
     pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
+    sources = {}  # name in the zip -> bytes
+    for dirpath, _, files in os.walk(pkg_dir):
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(dirpath, f)
+                rel = os.path.join(
+                    "pinot_pulsar_plugin_spark", os.path.relpath(full, pkg_dir)
+                )
+                with open(full, "rb") as fh:
+                    sources[rel] = fh.read()
+    digest = hashlib.sha256()
+    for rel in sorted(sources):
+        digest.update(rel.encode() + b"\0" + sources[rel] + b"\0")
     zpath = os.path.join(
-        tempfile.gettempdir(), f"pinot_pulsar_plugin_spark-{pkg.__version__}.zip"
+        tempfile.gettempdir(),
+        f"pinot_pulsar_plugin_spark-{digest.hexdigest()[:16]}.zip",
     )
     if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
+        tmp = f"{zpath}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as zf:
-            for dirpath, _, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(dirpath, f)
-                        rel = os.path.join(
-                            "pinot_pulsar_plugin_spark",
-                            os.path.relpath(full, pkg_dir),
-                        )
-                        zf.write(full, rel)
+            for rel in sorted(sources):
+                zf.writestr(rel, sources[rel])
         os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(zpath)
 
