@@ -54,7 +54,6 @@ from operator import itemgetter
 
 from pinot_pulsar_plugin_spark.sources.offsets import (
     EARLIEST_OFFSET,
-    ENTRY_MASK,
     encode_offset,
 )
 
@@ -137,15 +136,10 @@ class FakePulsarBroker:
         return sorted(out)
 
     def _scan(
-        self,
-        topic: str,
-        partition: int,
-        sidecar: str | None = None,
-        start: int = EARLIEST_OFFSET,
-        fills=None,
+        self, topic: str, partition: int, sidecar: str | None = None
     ) -> list[tuple[int, bytes, object]]:
-        """Sorted ``(offset, payload, value)`` for the messages of a
-        partition, from ONE read of each ledger it reads.
+        """Sorted ``(offset, payload, value)`` for every message of a
+        partition, from ONE read of each ledger.
 
         ``value`` comes from the ledger's ``sidecar`` (``"keys"`` or
         ``"pts"``), one JSON value per line aligned with the ledger's
@@ -155,30 +149,11 @@ class FakePulsarBroker:
         shift the value→offset alignment, so every entry of that ledger
         gets ``_UNALIGNED`` instead (ADVICE r2, ADVICE r6 #3).
 
-        A plain fetch reads only the ledgers it can deliver from: a
-        ledger whose whole offset range lies below ``start`` is skipped,
-        and once ``fills(count, nbytes, high)`` holds for the messages
-        at or after ``start`` read so far (``high`` the largest offset
-        read), no ledger whose range begins above ``high`` is read.
-        Without these arguments every ledger is read.
-
-        Ledgers are visited, and the result sorted, by signed offset,
-        not by ledger id, so ledger ids that wrap the i64 codec keep the
-        order every other method sees."""
+        Sorted by offset, not by ledger id, so ledger ids that wrap the
+        i64 codec keep the order every other method sees."""
         pdir = self._partition_dir(topic, partition)
         out: list[tuple[int, bytes, object]] = []
-        count = nbytes = 0
-        high = None
-        for ledger in sorted(
-            self._ledgers(topic, partition), key=lambda led: encode_offset(led, 0)
-        ):
-            first = encode_offset(ledger, 0)
-            if start != EARLIEST_OFFSET and encode_offset(ledger, ENTRY_MASK) < start:
-                continue
-            if fills is not None and high is not None and first > high and fills(
-                count, nbytes, high
-            ):
-                break
+        for ledger in self._ledgers(topic, partition):
             stem = os.path.join(pdir, f"ledger-{ledger:08d}")
             payloads = _lines(stem + ".jsonl")
             values: list = [None] * len(payloads)
@@ -193,13 +168,6 @@ class FakePulsarBroker:
                     values = [_UNALIGNED] * len(payloads)
             for entry, (payload, value) in enumerate(zip(payloads, values)):
                 out.append((encode_offset(ledger, entry), payload, value))
-            # a ledger's offsets run first, first + 1, ...
-            tail = payloads if start == EARLIEST_OFFSET else payloads[max(0, start - first) :]
-            if fills is not None and tail:
-                count += len(tail)
-                nbytes += sum(map(len, tail))
-                last = first + len(payloads) - 1
-                high = last if high is None else max(high, last)
         out.sort(key=itemgetter(0))
         return out
 
@@ -267,17 +235,7 @@ class FakePulsarBroker:
         superseded messages are simply not delivered. Entries of a
         ledger whose ``.keys`` sidecar is unaligned count as unkeyed.
         """
-        if compacted:  # a key's latest message can lie in any ledger
-            msgs = self._scan(topic, partition, "keys")
-        else:
-            msgs = self._scan(
-                topic,
-                partition,
-                start=start_offset,
-                fills=lambda count, nbytes, high: count >= max_msgs
-                or nbytes > max_bytes
-                or (end_offset is not None and high >= end_offset),
-            )
+        msgs = self._scan(topic, partition, "keys" if compacted else None)
         latest: dict = {}  # key -> its highest offset (msgs is sorted)
         for off, _, key in msgs:
             if _is_key(key):

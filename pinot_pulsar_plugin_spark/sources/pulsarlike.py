@@ -23,7 +23,10 @@ Shape of the mapping (SURVEY.md §3):
   NonDurable-subscription design ("anyway it's pinot that choose the
   cursor", consumer:157). ``PulsarLikeStreamReader`` holds the offset
   protocol (cursor, admission, planning, ack) that the prefetch reader
-  delegates to.
+  delegates to. A ``compacted`` source is the exception: its fetch
+  scans the whole partition, so Spark reads it through
+  ``PulsarLikeStreamReader`` itself, one executor task per topic
+  partition (≈ batchReceive + wrap, consumer:136-147), in parallel.
 
 Output rows are ``(value: binary, offset: long, partition: int)`` — the
 wire shape of MessageAndOffset (MessageAndOffset.java:26-27) inside a
@@ -43,11 +46,18 @@ checkpoint, even when the backlog exceeds maxMsgs/maxBytes.
 ``partitions()`` additionally snaps the cursor to every planned range
 and clamps ranges to start <= end, covering stale/failed ack writes.
 
-Memory: the driver's Python source process holds each admitted batch
-until Spark commits it, at most partitions × ``maxBytes`` — bytes that
+Memory: Spark's prefetch cache in the driver's Python source process
+holds the admitted messages of each batch until it commits a later
+batch, at most partitions × ``maxBytes`` per batch — bytes that
 admission has already read on the driver. Messages cross to the JVM
 once, from the driver, instead of being read again by one executor task
-per topic partition.
+per topic partition. A batch that starts behind the ack-recovered
+cursor is cached as offset ranges, read only if Spark plans that very
+batch: the first offer after a restart starts at ``initialOffset`` and
+is never planned, so it reads nothing beyond admission. The first batch
+of a fresh checkpoint over an acked topic is planned, and the driver
+reads it whole — everything up to the ack plus one cap — while
+planning.
 """
 
 from __future__ import annotations
@@ -55,6 +65,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
+from itertools import chain
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -357,6 +368,22 @@ class PulsarLikeStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         return self._admit()[0]
 
+    def _admit_from(self, start: dict) -> tuple[dict, dict, set]:
+        """Admission for a batch that Spark starts at ``start``: the
+        cursor is first moved up to ``start`` (never admit behind it,
+        e.g. for a replayed batch the ack sidecar does not cover yet).
+        Returns the end offsets, the fetched messages and the partitions
+        whose cursor was already ahead of ``start`` — for those the
+        fetched messages do not begin at ``start``."""
+        ahead = set()
+        for p, s in start.items():
+            cur = self._current.get(p, EARLIEST_OFFSET)
+            if cur > int(s):
+                ahead.add(p)
+            self._current[p] = max(cur, int(s))
+        end, fetched = self._admit()
+        return end, fetched, ahead
+
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         # Planning tells us the engine's cursor — keep it (restart
         # path). Max over BOTH ends of the planned range so the cursor
@@ -393,10 +420,39 @@ class PulsarLikeStreamReader(DataSourceStreamReader):
         pass
 
 
+class _Prefetched:
+    """The rows that ``PulsarLikePrefetchReader.read`` returns: admitted
+    Arrow batches, already in memory, and ``_Range`` s that are read
+    only when iterated. Spark keeps it in its prefetch cache and
+    iterates a ``copy.copy`` of it only when the planned batch starts
+    where it does; any other planned batch is read by
+    ``readBetweenOffsets``. So a range that is never planned as this
+    batch — the first offer after a restart starts at ``initialOffset``
+    behind the committed position — is never read on the driver."""
+
+    def __init__(self, parts: list):
+        self.parts = parts
+        self._rows: Iterator | None = None
+
+    def __copy__(self) -> "_Prefetched":
+        return _Prefetched(self.parts)
+
+    def __iter__(self) -> "_Prefetched":
+        return self
+
+    def __next__(self):
+        if self._rows is None:
+            self._rows = chain.from_iterable(
+                _read_range(p) if isinstance(p, _Range) else (p,) for p in self.parts
+            )
+        return next(self._rows)
+
+
 class PulsarLikePrefetchReader(SimpleDataSourceStreamReader):
-    """The stream reader Spark calls: admission and read in one fetch,
-    like the reference's fetchMessages, which returns the batch its
-    batchReceive just read (consumer:88-166).
+    """The stream reader Spark calls for a source that is not
+    compacted: admission and read in one fetch, like the reference's
+    fetchMessages, which returns the batch its batchReceive just read
+    (consumer:88-166).
 
     ``read(start)`` runs :class:`PulsarLikeStreamReader`'s admission and
     returns the admitted messages as Arrow batches with the end offset.
@@ -411,24 +467,22 @@ class PulsarLikePrefetchReader(SimpleDataSourceStreamReader):
         return self.stream.initialOffset()
 
     def read(self, start: dict) -> tuple[Iterator, dict]:
-        stream = self.stream
-        # Never admit behind Spark's start (a replayed batch the ack
-        # sidecar does not cover yet).
-        stream.partitions(start, start)
-        ahead = {p for p in start if stream._current[p] != int(start[p])}
-        end, fetched = stream._admit()
-        batches = []
-        for rng in stream.partitions(start, end):
+        end, fetched, ahead = self.stream._admit_from(start)
+        parts: list = []
+        for rng in self.stream.partitions(start, end):
             p = str(rng.partition)
             # The admitted messages are exactly [start, end) only when
             # admission began at start and delivers raw offsets. An
             # ack-recovered cursor ahead of start (a fresh checkpoint
-            # over an acked topic) or a compacted view reads the range.
+            # over an acked topic, or the first offer after a restart)
+            # or a compacted view leaves the range to be read when Spark
+            # iterates the batch. (Spark reads compacted sources through
+            # PulsarLikeStreamReader; see PulsarLikeDataSource.)
             if rng.compacted or p in ahead:
-                batches.extend(_read_range(rng))
+                parts.append(rng)
             elif fetched[p]:
-                batches.append(_arrow_batch(fetched[p], rng.partition))
-        return iter(batches), end
+                parts.append(_arrow_batch(fetched[p], rng.partition))
+        return _Prefetched(parts), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
         for rng in self.stream.partitions(start, end):
@@ -663,8 +717,16 @@ class PulsarLikeDataSource(DataSource):
     def streamWriter(self, schema, overwrite: bool) -> DataSourceStreamWriter:
         return PulsarLikeStreamWriter(self.options)
 
-    # No streamReader: Spark takes the prefetch path only for a source
-    # that defines simpleStreamReader alone.
+    def streamReader(self, schema) -> DataSourceStreamReader:
+        """Only a compacted view keeps one executor read task per topic
+        partition: its fetch scans the whole partition, so reading it on
+        the driver would serialize what those tasks do in parallel. Any
+        other source raises here, which makes Spark take the prefetch
+        path through ``simpleStreamReader``."""
+        if bool_option(self.options, "compacted", False):
+            return PulsarLikeStreamReader(self.options)
+        return super().streamReader(schema)
+
     def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
         return PulsarLikePrefetchReader(self.options)
 

@@ -382,52 +382,6 @@ def test_wrapped_ledger_ids_compaction_and_seek(tmp_path):
     assert b.first_offset_at_or_after("t", 0, T0 + 3) == offs[2]
 
 
-def test_fetch_reads_only_the_ledgers_it_delivers_from(tmp_path, monkeypatch):
-    """A plain fetch skips every ledger whose offsets all lie below its
-    start and stops after the ledger that fills it: a fetch from the
-    last of eight ledgers reads one ledger file."""
-    from pinot_pulsar_plugin_spark.sources import fakebroker
-
-    w = TopicWriter(str(tmp_path), "t", partitions=1, rollover_every=10)
-    offs = [w.append(0, json.dumps({"i": i})) for i in range(75)]
-    read = []
-    real_lines = fakebroker._lines
-
-    def counting_lines(path):
-        read.append(path)
-        return real_lines(path)
-
-    monkeypatch.setattr(fakebroker, "_lines", counting_lines)
-    b = FakePulsarBroker(str(tmp_path))
-    msgs = b.fetch("t", 0, offs[72])
-    assert [m.offset for m in msgs] == offs[72:]
-    assert [p for p in read if p.endswith(".jsonl")] == [
-        str(tmp_path / "t" / "partition-0" / "ledger-00000007.jsonl")
-    ]
-
-    read.clear()  # a capped fetch from the start stops after ledger 1
-    assert [m.offset for m in b.fetch("t", 0, EARLIEST_OFFSET, max_msgs=15)] == offs[:15]
-    assert len([p for p in read if p.endswith(".jsonl")]) == 2
-
-
-def test_capped_fetch_reads_every_ledger_it_interleaves_with(tmp_path):
-    """Ledger ids 2^36 apart pack to the same offsets, so their entries
-    interleave in offset order. A capped fetch that the first ledger
-    already fills must still read the second: it is a prefix of the
-    uncapped fetch."""
-    w = TopicWriter(str(tmp_path), "t", partitions=1, rollover_every=1000)
-    w.set_ledger(0, 1)
-    first = [w.append(0, b'{"a":%d}' % i) for i in range(3)]
-    w.set_ledger(0, (1 << 36) + 1)
-    second = [w.append(0, b'{"b":%d}' % i) for i in range(3)]
-    assert first == second
-    b = FakePulsarBroker(str(tmp_path))
-    whole = [(m.offset, m.payload) for m in b.fetch("t", 0, EARLIEST_OFFSET)]
-    for cap in range(1, 7):
-        got = b.fetch("t", 0, first[0], max_msgs=cap)
-        assert [(m.offset, m.payload) for m in got] == whole[:cap]
-
-
 _STRESS_ROLLOVER = 7
 
 

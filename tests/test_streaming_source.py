@@ -1232,17 +1232,14 @@ def test_prefetch_read_matches_range_read(seed, tmp_path):
             raise AssertionError("admission never reached the head")
 
 
-def test_stream_source_takes_the_prefetch_path(tmp_path):
-    """Spark prefetches on the driver only for a source that defines
-    simpleStreamReader and no streamReader: a reintroduced streamReader
-    would turn prefetching off without failing any other test."""
-    from pyspark.sql.datasource_internal import _SimpleStreamReaderWrapper, _streamReader
+def _spark_stream_reader(options: dict):
+    """The reader Spark's streaming planner builds for a pulsarlike
+    source, with no Spark session."""
+    from pyspark.sql.datasource_internal import _streamReader
     from pyspark.sql.types import BinaryType, IntegerType, LongType, StructField, StructType
 
     from pinot_pulsar_plugin_spark.sources.pulsarlike import PulsarLikeDataSource
 
-    root = str(tmp_path / "b")
-    _write_events_topic(root, n=4, partitions=1)
     schema = StructType(
         [
             StructField("value", BinaryType()),
@@ -1250,8 +1247,63 @@ def test_stream_source_takes_the_prefetch_path(tmp_path):
             StructField("partition", IntegerType()),
         ]
     )
-    reader = _streamReader(PulsarLikeDataSource({"path": root, "topic": "events"}), schema)
+    return _streamReader(PulsarLikeDataSource(options), schema)
+
+
+def test_stream_source_takes_the_prefetch_path(tmp_path):
+    """Spark prefetches on the driver only when the source's
+    streamReader raises: a streamReader that returned a reader for every
+    source would turn prefetching off without failing any other test. A
+    compacted source keeps one executor read task per topic partition."""
+    from pyspark.sql.datasource_internal import _SimpleStreamReaderWrapper
+
+    from pinot_pulsar_plugin_spark.sources.pulsarlike import PulsarLikeStreamReader
+
+    root = str(tmp_path / "b")
+    _write_events_topic(root, n=4, partitions=1)
+    reader = _spark_stream_reader({"path": root, "topic": "events"})
     assert isinstance(reader, _SimpleStreamReaderWrapper)
+    compacted = _spark_stream_reader({"path": root, "topic": "events", "compacted": "true"})
+    assert isinstance(compacted, PulsarLikeStreamReader)
+
+
+def test_first_offer_after_restart_reads_no_history_on_the_driver(tmp_path, monkeypatch):
+    """After a restart whose last batch was committed, Spark's prefetch
+    wrapper makes its first offer from ``initialOffset()`` (earliest),
+    while the ack-recovered cursor sits at the committed position. Spark
+    plans that batch from the committed position, so the offer misses
+    the prefetch cache: the driver must not have read the history
+    behind it, and the planned batch is read by ``readBetweenOffsets``."""
+    from pyspark.sql.datasource_internal import SimpleInputPartition
+
+    from pinot_pulsar_plugin_spark.sources import pulsarlike
+    from pinot_pulsar_plugin_spark.sources.fakebroker import FakePulsarBroker
+
+    root = str(tmp_path / "b")
+    w = TopicWriter(root, "t", partitions=1, rollover_every=50)
+    offs = [w.append(0, json.dumps({"i": i})) for i in range(500)]
+    FakePulsarBroker(root).acknowledge_cumulative("t", 0, offs[489])
+    ranges: list[tuple[int, int]] = []
+    real_read_range = pulsarlike._read_range
+
+    def recording_read_range(rng):
+        ranges.append((rng.start, rng.end))
+        return real_read_range(rng)
+
+    monkeypatch.setattr(pulsarlike, "_read_range", recording_read_range)
+    reader = _spark_stream_reader({"path": root, "topic": "t", "maxmsgs": "5"})
+    committed = {"0": offs[490]}
+    end = reader.latestOffset()
+    assert end == {"0": offs[495]}
+    reader.partitions(committed, end)
+    assert reader.getCache(committed, end) is None
+    assert ranges == []
+    replayed = [
+        o for b in reader.read(SimpleInputPartition(committed, end))
+        for o in b.column("offset").to_pylist()
+    ]
+    assert replayed == offs[490:495]
+    assert ranges == [(offs[490], offs[495])]
 
 
 def test_shipped_package_zip_follows_the_source(tmp_path, monkeypatch):
