@@ -57,11 +57,16 @@ def table_path(sf_dir, name: str) -> str:
 # DataFrame creation, so regenerating the parquet under a memoized
 # sf_dir within one application would read stale/deleted files. No
 # engine path rewrites testdata in-session; a fixture that must do so
-# should call _PlanMemo.by_key.clear() (the invalidation hook) after
-# rewriting.
+# should call invalidate_plan_memo() after rewriting.
 class _PlanMemo:
     by_key: dict = {}  # (appId, sf_dir, table) -> DataFrame
     app: str | None = None
+
+
+def invalidate_plan_memo() -> None:
+    """Forget every memoized table handle, so the next load_table call
+    re-lists and re-reads the parquet footers."""
+    _PlanMemo.by_key.clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -69,7 +74,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     app = spark.sparkContext.applicationId
     if _PlanMemo.app != app:
-        _PlanMemo.by_key.clear()
+        invalidate_plan_memo()
         _PlanMemo.app = app
     key = (app, str(sf_dir), name)
     got = _PlanMemo.by_key.get(key)

@@ -16,6 +16,7 @@ from pinot_pulsar_plugin_spark.functions.exact import (
     exact_sum_wide,
 )
 from pinot_pulsar_plugin_spark.functions.hashing import knuth_bucket
+from pinot_pulsar_plugin_spark.functions.shingles import in_row_pairs
 from pinot_pulsar_plugin_spark.operators.common import make_registry, t
 
 QUERIES, ORACLE, query = make_registry()
@@ -466,18 +467,9 @@ def q109_basket_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_item"))
     )
     # all ordered pairs (brand_a < brand_b) of the sorted distinct set,
-    # generated in-row: slice() clamps at the array end, so element i
-    # (0-based) pairs with every later element exactly once.
+    # generated in-row
     pair = (
-        bset.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(brands, (x, i) -> "
-                    "transform(slice(brands, i + 2, size(brands)), "
-                    "y -> struct(x AS brand_a, y AS brand_b))))"
-                )
-            ).alias("p")
-        )
+        bset.select(F.explode(F.expr(in_row_pairs("brands", "brand_a", "brand_b"))).alias("p"))
         .select(F.col("p.brand_a").alias("brand_a"), F.col("p.brand_b").alias("brand_b"))
         .groupBy("brand_a", "brand_b")
         .agg(F.count(F.lit(1)).alias("n_both"))

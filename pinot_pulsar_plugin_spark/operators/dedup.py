@@ -34,6 +34,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pinot_pulsar_plugin_spark.functions.exact import fold_dot, fold_dot_sql
+from pinot_pulsar_plugin_spark.functions.shingles import (
+    _SHINGLE_K,
+    _STOP_MAX_DF,
+    doc_freq,
+    drop_stop,
+    in_row_pairs,
+    jaccard_pairs,
+    kgram_window,
+    overlap_counts,
+    prefix_rows,
+    prefix_verified,
+    rarity_prefix,
+)
 from pinot_pulsar_plugin_spark.operators.common import make_registry, t
 
 QUERIES, ORACLE, query = make_registry()
@@ -62,9 +75,7 @@ def d43_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHINGLE_K = 3
 _JACCARD_MIN = 0.01  # tuned for the near-orthogonal synthetic corpus
-_STOP_MAX_DF = 0.10  # drop shingles present in >10% of documents
 
 
 @query(
@@ -133,18 +144,7 @@ def d44_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle is ever spent on deduplication.
     shingles = (
         toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    # guard: sequence(1, n) with n<1 DESCENDS in Spark
-                    # (step -1), so docs with < k tokens would crash
-                    # slice() — DuckDB's generate_series returns empty
-                    f"CASE WHEN size(tk) >= {_SHINGLE_K} THEN "
-                    f"array_distinct(transform(sequence(1, size(tk) - {_SHINGLE_K - 1}), "
-                    f"i -> xxhash64(concat_ws(' ', slice(tk, i, {_SHINGLE_K}))))) "
-                    f"ELSE array() END"
-                )
-            ).alias("h"),
+            "doc_id", F.explode(F.expr(kgram_window(hashed=True, distinct=True))).alias("h")
         )
         # r13: cache the shingle table PRE-PARTITIONED on the shingle
         # hash — the stop-list aggregate and both self-join legs all
@@ -160,34 +160,8 @@ def d44_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized at persist (owned-only count, r13): the stop-list
     # aggregate, the per-doc counts and both join sides otherwise race
     # the cache fill and re-run the tokenize+xxhash explode (r8 rule)
-    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    stop = (
-        shingles.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_docs))
-        .filter(F.col("df") > F.col("n_docs") * _STOP_MAX_DF)
-        .select("h")
-    )
-    kept = shingles.join(F.broadcast(stop), "h", "left_anti")
-    counts = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = kept.alias("a")
-    b = kept.alias("b")
-    inter = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    jac = F.col("n_common").cast("double") / (
-        F.col("ca.n") + F.col("cb.n") - F.col("n_common")
-    )
-    return (
-        inter.join(ca, F.col("doc_a") == F.col("ca.doc_id"))
-        .join(cb, F.col("doc_b") == F.col("cb.doc_id"))
-        .select("doc_a", "doc_b", "n_common", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= _JACCARD_MIN)
-    )
+    kept = drop_stop(shingles, doc_freq(shingles), d)
+    return jaccard_pairs(kept, _JACCARD_MIN)
 
 
 _MINHASH_PERMS = 64
@@ -510,13 +484,7 @@ def d48_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         grp.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(vs, (x, i) -> "
-                    "transform(slice(vs, i + 2, size(vs) - i - 1), "
-                    "y -> struct(x AS vec_a, y AS vec_b))))"
-                )
-            ).alias("p")
+            F.explode(F.expr(in_row_pairs("vs", "vec_a", "vec_b"))).alias("p")
         )
         .select("p.vec_a", "p.vec_b")
         .dropDuplicates(["vec_a", "vec_b"])
@@ -610,34 +578,10 @@ def d52_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split(F.lower("text"), " ").alias("tk"))
     sh = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(tk) >= {_SHINGLE_K} THEN "
-                f"array_distinct(transform(sequence(1, size(tk) - {_SHINGLE_K - 1}), "
-                f"i -> xxhash64(concat_ws(' ', slice(tk, i, {_SHINGLE_K}))))) "
-                f"ELSE array() END"
-            )
-        ).alias("h"),
+        "doc_id", F.explode(F.expr(kgram_window(hashed=True, distinct=True))).alias("h")
     )
-    dfreq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    # per-doc shingle array sorted by the global (df, h) rarity order;
-    # struct sort is lexicographic, so array_sort gives rarest-first
-    docs = (
-        sh.join(dfreq, "h")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "h"))).alias("arr"))
-        .select(
-            "doc_id",
-            F.expr("transform(arr, x -> x.h)").alias("hs"),
-            F.size("arr").alias("n"),
-        )
-        .withColumn(
-            "p", (F.col("n") - F.ceil(F.col("n") * F.lit(_D52_TAU)) + 1).cast("int")
-        )
-        .transform(persist_once)
-    )
-    pref = docs.select("doc_id", F.explode(F.expr("slice(hs, 1, p)")).alias("h"))
+    docs = rarity_prefix(sh, doc_freq(sh), _D52_TAU).transform(persist_once)
+    pref = prefix_rows(docs)
     cand = (
         pref.alias("a")
         .join(pref.alias("b"), "h")
@@ -645,25 +589,7 @@ def d52_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_a") < F.col("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    da = docs.select(
-        F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"), F.col("n").alias("na")
-    )
-    db = docs.select(
-        F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"), F.col("n").alias("nb")
-    )
-    nc = F.size(F.array_intersect("hs_a", "hs_b"))
-    return (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .withColumn("n_common", nc.cast("long"))
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= _D52_TAU)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
-    )
+    return prefix_verified(cand, docs, _D52_TAU)
 
 
 _SPAN_K = 8  # tokens per span — Lee et al. use 50 BPE tokens at corpus
@@ -727,15 +653,7 @@ def span_dup_fractions(d: DataFrame, k: int) -> DataFrame:
     boilerplate corpora against a brute-force reference."""
     toks = d.select("doc_id", F.split(F.lower("text"), " ").alias("tk"))
     spans = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(tk) >= {k} THEN "
-                f"transform(sequence(1, size(tk) - {k - 1}), "
-                f"i -> xxhash64(concat_ws(' ', slice(tk, i, {k})))) "
-                f"ELSE array() END"
-            )
-        ).alias("h"),
+        "doc_id", F.explode(F.expr(kgram_window(k=k, hashed=True))).alias("h")
     ).transform(persist_once)
     tot = spans.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
     dup = (
@@ -843,25 +761,7 @@ def winnow_pairs(d: DataFrame, jaccard_min: float) -> DataFrame:
 
     _, m = winnow_selection(F.split(F.lower("text"), " "))
     fp = d.select("doc_id", F.explode(F.array_distinct(m)).alias("f")).transform(persist_once)
-    counts = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = fp.alias("a")
-    b = fp.alias("b")
-    inter = (
-        a.join(b, (F.col("a.f") == F.col("b.f")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    jac = F.col("n_common").cast("double") / (
-        F.col("ca.n") + F.col("cb.n") - F.col("n_common")
-    )
-    return (
-        inter.join(ca, F.col("doc_a") == F.col("ca.doc_id"))
-        .join(cb, F.col("doc_b") == F.col("cb.doc_id"))
-        .select("doc_a", "doc_b", "n_common", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_min)
-    )
+    return jaccard_pairs(fp, jaccard_min, key="f")
 
 
 _INC_JACCARD_MIN = 0.5  # incremental ingest drops only near-identical docs
@@ -926,10 +826,14 @@ def d55_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full rerun pays); in production the corpus side (the per-doc
     sorted prefix index below) is the precomputed persisted index, so
     the incremental cost is |delta| prefixes joined into it.
-    Stop-shingle df-filtering (d44's skew guard, identical semantics
-    both engines) caps hot-key collisions; all shingle keys are 8-byte
+    The shared stop list (functions/shingles.py ``drop_stop``, the
+    same skew guard d44 and t87 use, identical semantics on both
+    engines) caps hot-key collisions; all shingle keys are 8-byte
     xxhash64 (d44's shuffle-width argument; the string-exact oracle
-    doubles as the collision check).
+    doubles as the collision check). The window, the rarity order, the
+    prefix and the in-row verification are the shared helpers d52
+    uses (``kgram_window``, ``rarity_prefix``, ``prefix_rows``,
+    ``prefix_verified``).
 
     r14 (guide §2/§3, VERDICT r13 #1): the delta×corpus collision join
     now runs under d52's PREFIX FILTER — exact pruning, not an
@@ -963,15 +867,7 @@ def d55_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select("doc_id", F.split(F.lower("text"), " ").alias("tk"))
     shingles = (
         toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"CASE WHEN size(tk) >= {_SHINGLE_K} THEN "
-                    f"array_distinct(transform(sequence(1, size(tk) - {_SHINGLE_K - 1}), "
-                    f"i -> xxhash64(concat_ws(' ', slice(tk, i, {_SHINGLE_K}))))) "
-                    f"ELSE array() END"
-                )
-            ).alias("h"),
+            "doc_id", F.explode(F.expr(kgram_window(hashed=True, distinct=True))).alias("h")
         )
         # r13 (the d44 rule): cache pre-partitioned on the shingle hash
         # — the df aggregate and the df-attach join both hash-partition
@@ -982,72 +878,25 @@ def d55_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialized at persist (owned-only count, r13): the df aggregate
     # and the df-attach join otherwise race the cache fill and re-run
-    # the tokenize+xxhash explode (r8 rule)
-    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    # document frequency per shingle; the stop filter (df > 10% of the
-    # corpus, d44 semantics) folds into the same relation — kept
-    # shingles carry their df so the rarity sort needs no second pass
-    dfreq = shingles.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    stop = (
-        dfreq.crossJoin(F.broadcast(n_docs))
-        .filter(F.col("df") > F.col("n_docs") * _STOP_MAX_DF)
-        .select("h")
+    # the tokenize+xxhash explode (r8 rule). The shared stop filter
+    # folds into the document-frequency relation — kept shingles carry
+    # their df so the rarity sort needs no second pass
+    dfreq = doc_freq(shingles)
+    keep_freq = drop_stop(dfreq, dfreq, d)
+    # per-doc shingle array in the shared rarity order, with n and the
+    # prefix bound p. Both join inputs are h-partitioned (cache +
+    # derived aggregate), so the df-attach join needs no exchange.
+    docs = rarity_prefix(shingles, keep_freq, _INC_JACCARD_MIN).transform(
+        persist_materialized
     )
-    keep_freq = dfreq.join(F.broadcast(stop), "h", "left_anti")
-    # per-doc shingle array in global rarity order (df asc, h asc —
-    # struct sort is lexicographic and h is distinct within a doc, so
-    # this is a total order); n and the prefix bound p ride along.
-    # Both join inputs are h-partitioned (cache + derived aggregate),
-    # so the df-attach join needs no exchange.
-    docs = (
-        shingles.join(keep_freq, "h")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "h"))).alias("arr"))
-        .select(
-            "doc_id",
-            F.expr("transform(arr, x -> x.h)").alias("hs"),
-            F.size("arr").alias("n"),
-        )
-        .withColumn(
-            "p",
-            (F.col("n") - F.ceil(F.col("n") * F.lit(_INC_JACCARD_MIN)) + 1).cast(
-                "int"
-            ),
-        )
-        .transform(persist_materialized)
-    )
-    pref_d = docs.filter(F.col("doc_id") % 2 == 1).select(
-        F.col("doc_id").alias("d_id"),
-        F.explode(F.expr("slice(hs, 1, p)")).alias("h"),
-    )
-    pref_c = docs.filter(F.col("doc_id") % 2 == 0).select(
-        F.col("doc_id").alias("c_id"),
-        F.explode(F.expr("slice(hs, 1, p)")).alias("h"),
-    )
+    pref_d = prefix_rows(docs.filter(F.col("doc_id") % 2 == 1), "d_id")
+    pref_c = prefix_rows(docs.filter(F.col("doc_id") % 2 == 0), "c_id")
     cand = pref_d.join(pref_c, "h").select("d_id", "c_id").dropDuplicates()
-    da = docs.select(
-        F.col("doc_id").alias("d_id"),
-        F.col("hs").alias("hs_a"),
-        F.col("n").alias("na"),
-    )
-    db = docs.select(
-        F.col("doc_id").alias("c_id"),
-        F.col("hs").alias("hs_b"),
-        F.col("n").alias("nb"),
-    )
     # exact verification: |A ∩ B| over the full stop-filtered sets —
     # identical to the former collision-count aggregate (the arrays
     # hold exactly the kept distinct shingle hashes per doc)
-    n_common = F.size(F.array_intersect("hs_a", "hs_b")).cast("long")
     near = (
-        cand.join(da, "d_id")
-        .join(db, "c_id")
-        .withColumn("n_common", n_common)
-        .filter(
-            F.col("n_common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_common"))
-            >= _INC_JACCARD_MIN
-        )
+        prefix_verified(cand, docs, _INC_JACCARD_MIN, "d_id", "c_id")
         .select("d_id")
         .distinct()
     )
@@ -1277,17 +1126,7 @@ def d57_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.split(F.lower("text"), " ").alias("tk")
     )
     sh = probe.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"CASE WHEN size(tk) >= {_SHINGLE_K} THEN "
-                    f"transform(sequence(1, size(tk) - {_SHINGLE_K - 1}), "
-                    f"i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1])) "
-                    f"ELSE array() END"
-                )
-            )
-        ).alias("s"),
+        "doc_id", F.explode(F.expr(kgram_window(distinct=True))).alias("s")
     ).transform(persist_once)
     hs = sh.select(
         "doc_id",
@@ -1326,18 +1165,7 @@ def d57_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ia, ib = sh.alias("ia"), sh.alias("ib")
-    inter = (
-        ia.join(
-            ib,
-            (F.col("ib.s") == F.col("ia.s"))
-            & (F.col("ia.doc_id") < F.col("ib.doc_id")),
-        )
-        .groupBy(
-            F.col("ia.doc_id").alias("doc_a"), F.col("ib.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    inter = overlap_counts(sh, "s")
     ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     out = (
@@ -1476,17 +1304,7 @@ def d58_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # WholeStageCodegen. Warm A/B at sf0.1: explode 1.19-1.35s vs
     # in-row 1.44-1.63s. The codegen boundary beats the exchange count.
     sh = probe.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"CASE WHEN size(tk) >= {_SHINGLE_K} THEN "
-                    f"transform(sequence(1, size(tk) - {_SHINGLE_K - 1}), "
-                    f"i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1])) "
-                    f"ELSE array() END"
-                )
-            )
-        ).alias("s"),
+        "doc_id", F.explode(F.expr(kgram_window(distinct=True))).alias("s")
     ).transform(persist_once)
     # r14 (guide §2.4): the signature is ONE wide row per doc — the 32
     # portable hashes are computed in-row per shingle (a flat md5
@@ -1550,18 +1368,7 @@ def d58_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ia, ib = sh.alias("ia"), sh.alias("ib")
-    inter = (
-        ia.join(
-            ib,
-            (F.col("ib.s") == F.col("ia.s"))
-            & (F.col("ia.doc_id") < F.col("ib.doc_id")),
-        )
-        .groupBy(
-            F.col("ia.doc_id").alias("doc_a"), F.col("ib.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    inter = overlap_counts(sh, "s")
     rel = (
         inter.join(
             F.broadcast(counts.select(F.col("doc_id").alias("doc_a"),
@@ -1741,14 +1548,7 @@ def d60_shingle_k_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "k",
             "doc_id",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(tk) >= k THEN "
-                    "array_distinct(transform(sequence(1, size(tk) - k + 1), "
-                    "i -> concat_ws(' ', slice(tk, i, k)))) "
-                    "ELSE array() END"
-                )
-            ).alias("s"),
+            F.explode(F.expr(kgram_window(k="k", distinct=True))).alias("s"),
         )
         .transform(persist_once)
     )

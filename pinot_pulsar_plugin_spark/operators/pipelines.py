@@ -33,6 +33,7 @@ from pinot_pulsar_plugin_spark.functions.hashing import (
     knuth_bucket_sql,
     split_hash32,
 )
+from pinot_pulsar_plugin_spark.functions.shingles import kgram_window
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -369,14 +370,7 @@ def d50_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles = (
         d.select(
             "doc_id",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(split(lower(text), ' ')) >= 3 THEN "
-                    "transform(sequence(1, size(split(lower(text), ' ')) - 2), "
-                    "i -> concat_ws(' ', slice(split(lower(text), ' '), i, 3))) "
-                    "ELSE array() END"
-                )
-            ).alias("s"),
+            F.explode(F.expr(kgram_window("split(lower(text), ' ')"))).alias("s"),
         )
         .distinct()
     )
@@ -1639,11 +1633,7 @@ def q200_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     tk = F.split(F.lower("text"), " ")
-    big = F.expr(
-        "CASE WHEN size(tk) >= 2 THEN "
-        "transform(sequence(1, size(tk) - 1), "
-        "i -> concat_ws(' ', tk[i-1], tk[i])) ELSE array() END"
-    )
+    big = F.expr(kgram_window(k=2))
     sig = (
         d.select("doc_id", F.md5(norm).alias("h"), tk.alias("tk"))
         .withColumn("big", big)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pinot_pulsar_plugin_spark.caching import persist_materialized, persist_once
 from pinot_pulsar_plugin_spark.functions.arrays import runs_expr
+from pinot_pulsar_plugin_spark.functions.shingles import doc_freq, drop_stop, kgram_window
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -683,9 +684,7 @@ def t62_top_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at finish
     top = F.expr(
         "aggregate("
-        "  array_sort(CASE WHEN size(tk) >= 3 THEN "
-        "    transform(sequence(1, size(tk) - 2), i -> concat_ws(' ', slice(tk, i, 3))) "
-        "    ELSE array() END),"
+        f"  array_sort({kgram_window(k=3)}),"
         "  named_struct('prev', CAST(NULL AS STRING), 'run', 0L,"
         "               'bs', -1L, 'bc', 0L, 'bg', CAST(NULL AS STRING)),"
         "  (acc, g) -> IF(g <=> acc.prev,"
@@ -777,17 +776,7 @@ def t63_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = toks.select(F.explode("tk").alias("w"))
     uni = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c_a"))
     v = uni.agg(F.count(F.lit(1)).alias("vs"))
-    bg = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(tk) >= 2 THEN "
-                "transform(sequence(1, size(tk) - 1), "
-                "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1))) "
-                "ELSE array() END"
-            )
-        ).alias("b"),
-    )
+    bg = toks.select("doc_id", F.explode(F.expr(kgram_window(k=2))).alias("b"))
     bgc = bg.groupBy("doc_id", "b").agg(F.count(F.lit(1)).alias("c_doc"))
     cb = bgc.groupBy("b").agg(F.sum("c_doc").alias("c_ab"))
     term_fp = F.round(
@@ -2191,12 +2180,7 @@ def t80_crosscorpus_ngram_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashed TWICE per execution); each doc now shingles exactly once,
     # in whichever leg owns it
     sh_expr = F.explode(
-        F.expr(
-            f"CASE WHEN size(tk) >= {_T80_K} THEN "
-            f"array_distinct(transform(sequence(1, size(tk) - {_T80_K - 1}), "
-            f"i -> xxhash64(concat_ws(' ', slice(tk, i, {_T80_K}))))) "
-            f"ELSE array() END"
-        )
+        F.expr(kgram_window(k=_T80_K, hashed=True, distinct=True))
     ).alias("h")
     train = toks.filter(F.col("doc_id") % 2 == 0).select(sh_expr).distinct()
     test = toks.filter(F.col("doc_id") % 2 == 1).select("doc_id", sh_expr)
@@ -2502,14 +2486,7 @@ def t83_heldout_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg = toks.select(
         "doc_id",
         (F.col("doc_id") % 2 == 0).alias("is_train"),
-        F.explode(
-            F.expr(
-                "CASE WHEN size(tk) >= 2 THEN "
-                "transform(sequence(1, size(tk) - 1), "
-                "i -> concat_ws(' ', tk[i-1], tk[i])) "
-                "ELSE array() END"
-            )
-        ).alias("b"),
+        F.explode(F.expr(kgram_window(k=2))).alias("b"),
     ).transform(persist_once)
     train_tok = toks.filter(F.col("doc_id") % 2 == 0).select(
         F.explode("tk").alias("w")
@@ -2822,11 +2799,14 @@ def t87_syndication_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pair counts and mean Jaccard per unordered
     source pair (see block comment).
 
-    Scale shape: identical to d44 — df-filtered shingle equi-join on
-    8-byte hashes would be the corpus form; here the probe thresholds
-    keep string keys like the oracle. The cross-source predicate
-    filters inside the join; the matrix rollup is #source-pairs rows
-    (≤ 190 at 20 sources)."""
+    Scale shape: d44's, through the same shared helpers
+    (functions/shingles.py: ``kgram_window`` at ``_SHINGLE_K``,
+    ``doc_freq`` + ``drop_stop`` at ``_STOP_MAX_DF``) — df-filtered
+    shingle equi-join on 8-byte hashes would be the corpus form; here
+    the probe thresholds keep string keys like the oracle. The pair
+    join stays its own: it carries ``source`` and the cross-source
+    predicate filters inside the join; the matrix rollup is
+    #source-pairs rows (≤ 190 at 20 sources)."""
     d = t(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", "source", F.split(F.lower("text"), " ").alias("tk")
@@ -2834,24 +2814,9 @@ def t87_syndication_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles = toks.select(
         "doc_id",
         "source",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(tk) >= 3 THEN "
-                "array_distinct(transform(sequence(1, size(tk) - 2), "
-                "i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1]))) "
-                "ELSE array() END"
-            )
-        ).alias("s"),
+        F.explode(F.expr(kgram_window(distinct=True))).alias("s"),
     ).transform(persist_once)
-    n_docs = d.agg(F.count(F.lit(1)).alias("nd"))
-    stop = (
-        shingles.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_docs))
-        .filter(F.col("df") > F.col("nd") * 0.10)
-        .select("s")
-    )
-    kept = shingles.join(F.broadcast(stop), "s", "left_anti").transform(persist_once)
+    kept = drop_stop(shingles, doc_freq(shingles, "s"), d, "s").transform(persist_once)
     counts = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = kept.alias("a"), kept.alias("b")
     inter = (

@@ -413,6 +413,35 @@ _IMPL_REPLACED = {
     #   at sf0.1; q180 1.06 → 0.75 s, q201 0.82 → 0.20 s.
     "q180_max_concurrency": 14,
     "q201_overlapping_orders": 14,
+    # r15 shared text-feature layer (functions/shingles.py): the k-gram
+    # window, stop list, rarity-order prefix and its verification, the
+    # pair-count Jaccard block and in-row pair generation are each
+    # written once and every copy routes through them (d49/d51 reach
+    # d44's code). Frame-equal at sf0.1 and oracle parity OK at
+    # sf0.001/sf0.01/sf0.1 for all; normalized optimized plans
+    # identical for d44/d48/d50/d52/d53/d54/d55/d60/t62/t80. Plan text
+    # moved to the canonical forms for d57/d58/t87 (slice window
+    # instead of tk[i-1], tk[i], tk[i+1]), t63/t83/q200 (bigram window)
+    # and q109 (d48's pair slice length).
+    "d44_ngram_jaccard_pairs": 15,
+    "d48_embedding_neardup_lsh": 15,
+    "d49_neardup_components": 15,
+    "d50_contamination": 15,
+    "d51_cluster_keeper_quality": 15,
+    "d52_prefix_filter_jaccard": 15,
+    "d53_dup_span_fraction": 15,
+    "d54_winnow_neardup_pairs": 15,
+    "d55_incremental_dedup": 15,
+    "d57_minhash_estimate": 15,
+    "d58_lsh_band_sweep": 15,
+    "d60_shingle_k_sensitivity": 15,
+    "q109_basket_cooccurrence": 15,
+    "q200_curation_funnel": 15,
+    "t62_top_ngram_coverage": 15,
+    "t63_bigram_surprisal": 15,
+    "t80_crosscorpus_ngram_recall": 15,
+    "t83_heldout_lm_surprisal": 15,
+    "t87_syndication_matrix": 15,
 }
 
 

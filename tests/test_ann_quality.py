@@ -12,6 +12,8 @@ reintroducing an all-pairs product.
 
 from __future__ import annotations
 
+import pytest
+
 from pinot_pulsar_plugin_spark.operators import similarity as S
 
 SF = "/root/testdata/sf0.01"
@@ -31,6 +33,46 @@ def test_ann_recall_floors(spark):
     assert len(ivf & exact) / len(exact) >= 0.08
     # every query must get its full k back (buckets/cells non-degenerate)
     assert len(lsh) == 30 and len(ivf) == 30
+
+
+@pytest.mark.parametrize(
+    "emb",
+    [
+        [[1.0, 2.0, 3.0, 4.0], None],
+        [[1.0, 2.0, 3.0, 4.0], [1.0, 2.0]],
+        [[1.0, 2.0, 3.0], [1.0, 2.0, 3.0, 4.0, 5.0]],
+    ],
+    ids=["null", "ragged-6", "ragged-8"],
+)
+def test_cos_rerank_rejects_null_or_ragged_batches(emb):
+    """No Spark: d48's mapInArrow kernel on a two-row batch with unit
+    norms. Flattening skips a null list and concatenates ragged ones,
+    and the reshape still succeeds (6 and 8 values over 2 rows), so an
+    unchecked kernel returns wrong cosines (1.0/4.0, 1.0/1.0, 1.0/3.0)
+    instead of failing."""
+    import pyarrow as pa
+
+    from pinot_pulsar_plugin_spark.functions.vectorized import _rerank_batches
+
+    def batch(emb_a, emb_b):
+        n = len(emb_a)
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(range(n), pa.int64()),
+                pa.array(range(n), pa.int64()),
+                pa.array(emb_a, pa.list_(pa.float32())),
+                pa.array(emb_b, pa.list_(pa.float32())),
+                pa.array([1.0] * n),
+                pa.array([1.0] * n),
+            ],
+            ["vec_a", "vec_b", "emb_a", "emb_b", "nrm_a", "nrm_b"],
+        )
+
+    with pytest.raises(ValueError, match="cos_rerank: (null|ragged)"):
+        list(_rerank_batches([batch(emb, emb)]))
+    good = batch([[1.0, 2.0], [0.0, 1.0]], [[1.0, 0.0], [0.0, 2.0]])
+    (out,) = _rerank_batches([good])
+    assert out.column(2).to_pylist() == [1.0, 2.0]
 
 
 def test_d48_recall_characterized_against_exhaustive(spark):

@@ -53,3 +53,18 @@ def test_all_tables_loadable_nonempty(spark, sf_dir):
         assert load_table(spark, sf_dir, name).limit(1).count() == 1, (
             f"{sf_dir}/{name} unreadable or empty"
         )
+
+
+def test_invalidate_plan_memo_forgets_table_handles(spark):
+    """load_table memoizes one DataFrame per (app, sf_dir, table);
+    invalidate_plan_memo() is the hook a fixture calls after rewriting
+    testdata, so the next load builds a fresh handle."""
+    from pinot_pulsar_plugin_spark.catalog import invalidate_plan_memo
+
+    sf_dir = "/root/testdata/sf0.001"
+    first = load_table(spark, sf_dir, "region")
+    assert load_table(spark, sf_dir, "region") is first
+    invalidate_plan_memo()
+    again = load_table(spark, sf_dir, "region")
+    assert again is not first
+    assert load_table(spark, sf_dir, "region") is again
