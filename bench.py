@@ -27,6 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pinot_pulsar_plugin_spark.plans.explain import codegen_compiles
 from pinot_pulsar_plugin_spark.registry import all_queries
 from pinot_pulsar_plugin_spark.session import get_spark
 
@@ -273,6 +274,15 @@ def _read_load1m() -> float | None:
         return None
 
 
+def recompiles(readings: dict[str, list[int]]) -> dict[str, int]:
+    """Per query, the generated-code classes compiled during its samples
+    after the first. ``readings[name]`` holds the codegen compile
+    counter read before the first sample and after each sample, so a
+    warm session whose class cache holds the query's working set
+    reports 0."""
+    return {name: r[-1] - r[1] for name, r in readings.items()}
+
+
 def compact_headline_line(
     total: float,
     n_queries: int,
@@ -333,13 +343,15 @@ def main() -> None:
     spark = get_spark("bench", driver_memory="24g")
     queries = all_queries()
 
-    def run(name: str) -> float:
+    def run(name: str, compiles: list[int]) -> float:
         t0 = time.perf_counter()
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        t1 = time.perf_counter()
+        compiles.append(codegen_compiles(spark))  # outside the timed window
+        return t1 - t0
 
     t_suite0 = time.perf_counter()
-    run("q01_pricing_summary")  # warm-up (JVM, codegen, file listing)
+    run("q01_pricing_summary", [])  # warm-up (JVM, codegen, file listing)
 
     # Adaptive sampling (VERDICT r4 #4): host noise bursts last whole
     # runs, so when the first 3 samples disagree by more than the min
@@ -353,16 +365,18 @@ def main() -> None:
     runs_used: dict[str, int] = {}
     noise_events: dict[str, dict] = {}
     load_series: dict[str, float] = {}
+    compile_readings: dict[str, list[int]] = {}
     for name in HEADLINE:
         load = _read_load1m()
         if load is not None:
             load_series[name] = load
-        samples = [run(name) for _ in range(n_runs)]
+        reads = compile_readings[name] = [codegen_compiles(spark)]
+        samples = [run(name, reads) for _ in range(n_runs)]
         while (
             len(samples) < max_runs
             and (max(samples) - min(samples)) > max(min(samples), 0.1)
         ):
-            samples.append(run(name))
+            samples.append(run(name, reads))
         times[name] = round(min(samples), 3)
         spread[name] = round(max(samples) - min(samples), 3)
         runs_used[name] = len(samples)
@@ -431,6 +445,7 @@ def main() -> None:
         "sum_of_mins": total,
         "load_1m": load_1m,
         "load_1m_series": {k: round(v, 2) for k, v in load_series.items()},
+        "recompiles": recompiles(compile_readings),
     }
     here = os.path.dirname(os.path.abspath(__file__))
     details_path = os.path.join(here, "bench_details.json")

@@ -38,3 +38,15 @@ def has_broadcast_join(df: DataFrame) -> bool:
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters section of the scan node(s)."""
     return "\n".join(re.findall(r"PushedFilters: \[[^\]]*\]", formatted_plan(df)))
+
+
+def codegen_compiles(spark) -> int:
+    """Generated-code classes Spark has compiled in this JVM so far.
+
+    Reads the count of Spark's codegen compile-time histogram, which
+    grows by one per class compiled and not per cache hit, so the
+    difference across a run is that run's recompilation; a warm
+    session whose working set fits the class cache adds 0.
+    """
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

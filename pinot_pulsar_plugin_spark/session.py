@@ -13,6 +13,20 @@ multi-executor cluster at ~100 TB:
 - Session timezone pinned to UTC so results are comparable with the
   DuckDB oracle (and portable across clusters).
 - Arrow enabled for every Python<->JVM hop (pandas UDFs, toPandas).
+- Spark's generated-code class cache (one LRU per JVM) holds 2048
+  classes instead of Spark's default 100, which is smaller than the
+  engine's working set. Measured on 4 cores: one round of the 13
+  ``perfbench`` ``query_mix`` queries compiles 274 classes, so at 100
+  entries every warm round recompiled about 240 of them (8-9 s a
+  round, against 6-8 s with the larger bound and 0-16 compiles). The
+  107 headline queries at sf0.01 compile about 1,800 classes in a
+  first pass; a second pass in the same session recompiled 1,930 at
+  100 entries and 143 at 2048 (66 s vs 40 s). 2048 holds that set and
+  is still a bound, so a session that runs the whole registry evicts
+  instead of piling classes up. Metaspace after the headline pass was
+  the same at either bound (196 vs 194 MB). The conf is static and
+  read once per JVM, at the first compile; a second ``get_spark`` in
+  the same process reuses the session and keeps it.
 """
 
 from __future__ import annotations
@@ -20,6 +34,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# Generated-code classes kept per JVM (module docstring).
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def default_parallelism() -> int:
@@ -92,6 +110,7 @@ def get_spark(
         # managed tables (bucketed-join tests, scratch marts) land in
         # tmp, never the repo
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if driver_memory:
         builder = builder.config("spark.driver.memory", driver_memory)

@@ -119,3 +119,18 @@ def test_load_prior_survives_null_value_details(tmp_path, monkeypatch):
     monkeypatch.setattr(bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py"))
     prior = bench._load_prior()
     assert prior == parsed  # no crash, no splice from the broken file
+
+
+def test_recompiles_counts_only_samples_after_the_first():
+    """bench_details.json's ``recompiles`` map: the codegen compile
+    counter is read before a query's first sample and after each
+    sample; the first sample's compiles are the cold cost, and any
+    compile after it is a warm-session recompile."""
+    readings = {
+        "warm": [100, 140, 140, 140],  # 40 cold, then all cache hits
+        "evicting": [140, 180, 210, 245, 280],  # 5 samples, recompiling
+        "single": [280, 290],  # one sample: nothing after the first
+    }
+    assert bench.recompiles(readings) == {"warm": 0, "evicting": 100, "single": 0}
+    # the final stdout line does not carry the map
+    assert "recompiles" not in json.loads(bench.compact_headline_line(1.0, 2, 0.1))

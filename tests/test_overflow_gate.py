@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -129,6 +130,24 @@ def test_planted_violations_flagged(spark):
     assert "decimal_div_quotient" not in cats(
         df.select(F.expr("a div (b + 1)").alias("q"))
     )
+
+
+def test_snippets_do_not_depend_on_expression_ids():
+    """Expression ids are per-session counters, so the same plan numbered
+    by another session must give the same stored findings; otherwise
+    every regeneration of OVERFLOW_AUDIT.json rewrites the snippets of
+    untouched entries."""
+    plan = (
+        "Aggregate [flag#{a}], [flag#{a}, count(1) AS n#{b}L, sum(q#{c}L) AS sx#{d}L, "
+        "sum((q#{c}L * c#{e}L)) AS sxy#{f}L, (sum(q#{c}L) * 2654435761) AS h#{g}L]\n"
+        "+- Aggregate [flag#{a}], [flag#{a}, sum(x#{h}L) AS q#{c}L, sum(y#{h}L) AS c#{e}L]"
+    )
+    low = plan.format(**dict(zip("abcdefgh", range(1, 9))))
+    high = plan.format(**dict(zip("abcdefgh", range(99991, 99999))))
+    found = O.audit_plan_text(low)
+    assert {f["category"] for f in found} >= {"sum_long_product", "sum_of_agg_output"}
+    assert found == O.audit_plan_text(high)
+    assert not any(re.search(r"#\d", f["snippet"]) for f in found)
 
 
 def test_q185_mae_cents_stays_long_where_milli_wrapped(spark):

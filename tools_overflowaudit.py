@@ -92,6 +92,11 @@ _MUL_CASTLIT_L = re.compile(r"\((cast\(\d+ as bigint\)) \* ([^\s()]+)\)")
 _AS_LONG = re.compile(r"AS \w+#(\d+)L\b")
 _ALIAS = re.compile(r"\b\w+#(\d+)L AS \w+#(\d+)L\b")
 _LONG_REF = re.compile(r"\b\w+#(\d+)L\b")
+_EXPR_ID = re.compile(r"#\d+L?")
+
+
+def _drop_ids(text: str) -> str:
+    return _EXPR_ID.sub("#", text)
 
 
 def _balanced_end(text: str, lparen: int) -> int:
@@ -253,7 +258,11 @@ def audit_plan_text(text: str) -> list[dict]:
         return any(s <= pos < e and not dec for s, e, dec in spans)
 
     def snip(m: re.Match) -> str:
-        return text[max(0, m.start() - 48) : m.end() + 8].replace("\n", " ")
+        # margins are counted after dropping expression ids (per-session
+        # counters), so a renumbered plan gives the same snippet
+        head = _drop_ids(text[max(0, m.start() - 960) : m.start()])[-48:]
+        tail = _drop_ids(text[m.end() : m.end() + 160])[:8]
+        return (head + _drop_ids(m.group(0)) + tail).replace("\n", " ")
 
     def is_agg(tok: str) -> bool:
         a = _ATTR.match(tok)
@@ -325,7 +334,7 @@ def audit_plan_text(text: str) -> list[dict]:
             findings.append(
                 {
                     "category": "decimal_div_quotient",
-                    "snippet": dividend[-90:] + " div …",
+                    "snippet": _drop_ids(dividend)[-90:] + " div …",
                 }
             )
 
@@ -347,7 +356,7 @@ def audit_plan_text(text: str) -> list[dict]:
             findings.append(
                 {
                     "category": "sum_of_agg_output",
-                    "snippet": text[max(0, s - 4) : min(e + 1, s + 90)],
+                    "snippet": _drop_ids(text[s - 4 : e + 1])[:94],
                 }
             )
     return findings
