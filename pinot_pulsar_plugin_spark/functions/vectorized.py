@@ -24,12 +24,9 @@ import pyarrow.compute as pc
 # same worker-shipping constraint as streaming/sessions.py et al.
 # (the driver contract imports the package from an arbitrary cwd, so
 # the repo is NOT on the Python workers' sys.path).
-try:
-    from pyspark import cloudpickle as _pyspark_cloudpickle
+from pyspark import cloudpickle
 
-    _pyspark_cloudpickle.register_pickle_by_value(sys.modules[__name__])
-except (ImportError, AttributeError):  # old pyspark: repo-on-path only
-    pass
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 _RERANK_SCHEMA = "vec_a long, vec_b long, cosine double"
 _RERANK_COLS = ["vec_a", "vec_b", "emb_a", "emb_b", "nrm_a", "nrm_b"]

@@ -9,6 +9,37 @@ the other canonical scale path, IVF: a tiny coarse-quantizer centroid
 set partitions the corpus into disjoint cells; queries probe only their
 nprobe nearest cells. Unlike s49's random planes, s50's quantizer is
 data-derived and fully deterministic, so it is exact-oracle-checkable.
+
+The vector-search layer. The rules that define the index are written
+once, in the private helpers below, and s48–s50, s62, s63, s65 and
+s67–s69 build on them:
+
+- **Normed corpus** (``_normed``): ``vec_id, embedding, nrm``, nrm the
+  fold norm.
+- **Query set** (``_queries``): ``vec_id < _N_QUERIES`` as ``q_id,
+  q_emb, q_nrm``; ``_qcos`` is a query row's cosine to a corpus row.
+- **Exact scan and top-k** (``_exact``, ``_top``): every corpus vector
+  against the broadcast queries, self-pairs dropped, ranked by
+  ``(cosine DESC, n_id)``.
+- **IVF quantizer** (``_centroids``, ``_cell_scores``): the ``_IVF_K``
+  vectors after the query set are the centroids; cell scores are the
+  one sanctioned broadcast product against them.
+- **Cell assignment**, in two forms that assign the same cells
+  (tests/test_ann_quality.py pins it): ``_cells``, a map-side
+  combinable max(struct) argmax (s50, s62, s65), and ``_rank_cells``,
+  a window ranking that s67–s69 persist once in ``_ivf_ranked`` and
+  read both cells (rn = 1) and probes from.
+- **Probes and candidates** (``_probes``, ``_ivf_candidates``,
+  ``_ranked_candidates``): each query's ``_IVF_NPROBE`` nearest cells,
+  and the members of those cells as its candidates.
+
+Helpers never persist: each caller keeps its own cache choice. Kept
+separate, on purpose: the oracle SQL strings (the reference the tests
+compare against, so they stay as written); the labelled ``p_*`` probe
+sides of s52/s61, which have other bounds; s60's ``_MMR_NQ`` query
+set; s66's centroids, taken straight from the scan without the normed
+corpus; and d48 in ``dedup.py``, whose rerank is a ``mapInArrow``
+kernel.
 """
 
 from __future__ import annotations
@@ -17,7 +48,7 @@ from pinot_pulsar_plugin_spark.caching import persist_materialized, persist_once
 
 import random
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pinot_pulsar_plugin_spark.functions.exact import (
@@ -32,6 +63,121 @@ QUERIES, ORACLE, query = make_registry()
 
 _N_QUERIES = 10  # vec_id < 10 are the query vectors
 _TOP_K = 5
+_IVF_K = 16  # coarse-quantizer cells (↑ to sqrt(n) at scale)
+_IVF_NPROBE = 2  # cells each query probes
+_IVF_TOP_K = 3
+
+
+def _normed(em: DataFrame, *cols) -> DataFrame:
+    """The normed corpus ``vec_id, embedding, nrm``, then ``cols``."""
+    return em.select("vec_id", "embedding", fold_norm("embedding").alias("nrm"), *cols)
+
+
+def _queries(n: DataFrame, *cols) -> DataFrame:
+    """The query vectors of ``n`` as ``q_id, q_emb, q_nrm``, then ``cols``."""
+    return n.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+        *cols,
+    )
+
+
+def _qcos():
+    """Cosine of a query row (q_emb, q_nrm) to a corpus row (embedding, nrm)."""
+    return fold_dot("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
+
+
+def _exact(n: DataFrame, q: DataFrame, score=None) -> DataFrame:
+    """The exact scan ``q_id, n_id, cosine``: every vector of ``n``
+    against every query of ``q`` but itself. The query side is
+    broadcast (tiny), so the corpus never shuffles. ``score`` replaces
+    the full-dimension cosine (s63's prefix cosine)."""
+    return n.join(F.broadcast(q), F.col("q_id") != F.col("vec_id")).select(
+        "q_id",
+        F.col("vec_id").alias("n_id"),
+        (_qcos() if score is None else score).alias("cosine"),
+    )
+
+
+def _top(
+    scored: DataFrame, k: int | None, rank: str = "rank", by=("q_id",)
+) -> DataFrame:
+    """Rank each ``by`` group of ``scored`` by (cosine DESC, n_id) into
+    column ``rank`` and keep ranks <= k (all of them when k is None).
+    Spark lowers the cut to a map-side WindowGroupLimit."""
+    w = Window.partitionBy(*by).orderBy(F.desc("cosine"), F.asc("n_id"))
+    ranked = scored.withColumn(rank, F.row_number().over(w))
+    return ranked if k is None else ranked.filter(F.col(rank) <= k)
+
+
+def _centroids(n: DataFrame) -> DataFrame:
+    """The IVF coarse quantizer: the ``_IVF_K`` vectors after the query
+    set, as ``c_id, c_emb, c_nrm`` (deterministic sampled centroids, so
+    the index is exact-oracle-checkable)."""
+    return n.filter(
+        (F.col("vec_id") >= _N_QUERIES) & (F.col("vec_id") < _N_QUERIES + _IVF_K)
+    ).select(
+        (F.col("vec_id") - _N_QUERIES).cast("int").alias("c_id"),
+        F.col("embedding").alias("c_emb"),
+        F.col("nrm").alias("c_nrm"),
+    )
+
+
+def _cell_scores(n: DataFrame, *cols) -> DataFrame:
+    """``vec_id, cols, c_id, ccos``: each vector's cosine to each centroid."""
+    # Deliberate broadcast product vs the K-row centroid table: the
+    # fan-out is bounded by the quantizer size, not by data (the one
+    # sanctioned nested-loop shape besides d47/q48 — see
+    # test_plan_quality.test_no_accidental_cartesian_products).
+    ccos = fold_dot("embedding", "c_emb") / (F.col("nrm") * F.col("c_nrm"))
+    return n.crossJoin(F.broadcast(_centroids(n))).select(
+        "vec_id", *cols, "c_id", ccos.alias("ccos")
+    )
+
+
+def _cells(scored: DataFrame) -> DataFrame:
+    """Each vector's IVF cell from ``_cell_scores``: ``vec_id``, the
+    carried columns, ``c_id``."""
+    # argmax over centroids = max(struct(ccos, -c_id)): highest cosine,
+    # smallest c_id on ties — identical order to the oracle's
+    # ROW_NUMBER(ORDER BY ccos DESC, c_id). Map-side combinable, and
+    # first() of a carried column is deterministic (constant within
+    # the group).
+    carried = [c for c in scored.columns if c not in ("vec_id", "c_id", "ccos")]
+    return (
+        scored.groupBy("vec_id")
+        .agg(
+            F.max(F.struct(F.col("ccos"), (-F.col("c_id")).alias("neg_c"))).alias("m"),
+            *[F.first(c).alias(c) for c in carried],
+        )
+        .select("vec_id", *carried, (-F.col("m.neg_c")).alias("c_id"))
+    )
+
+
+def _rank_cells(scored: DataFrame) -> DataFrame:
+    """``scored`` plus ``rn``, each vector's centroids ranked by the
+    argmax's order: rn = 1 is its cell, rn <= nprobe its probe cells."""
+    w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("c_id"))
+    return scored.withColumn("rn", F.row_number().over(w))
+
+
+def _probes(ranked: DataFrame) -> DataFrame:
+    """Each query's ``_IVF_NPROBE`` nearest cells from ``_rank_cells``:
+    ``q_id, q_emb, q_nrm, c_id``."""
+    return _queries(ranked.filter(F.col("rn") <= _IVF_NPROBE), "c_id")
+
+
+def _ivf_candidates(n: DataFrame) -> DataFrame:
+    """The IVF candidates of s50/s62, ``q_id, n_id, cosine``: each query
+    against the members of its probed cells but itself."""
+    scored = _cell_scores(n, "embedding", "nrm")
+    return (
+        _cells(scored)
+        .join(F.broadcast(_probes(_rank_cells(scored))), "c_id")
+        .filter(F.col("q_id") != F.col("vec_id"))
+        .select("q_id", F.col("vec_id").alias("n_id"), _qcos().alias("cosine"))
+    )
 
 
 @query(
@@ -62,29 +208,9 @@ def s48_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query top-k is a window rank — Spark pushes a partial top-k
     before the shuffle. Ranking on the bit-exact fold keeps order
     identical to the oracle."""
-    em = t(spark, sf_dir, "embeddings")
-    n = em.select(
-        "vec_id", "embedding", F.sqrt(fold_dot("embedding", "embedding")).alias("nrm")
-    )
-    q = n.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = fold_dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_nrm") * F.col("nrm")
-    )
-    scored = (
-        n.join(F.broadcast(q), F.col("q_id") != F.col("vec_id"))
-        .select("q_id", F.col("vec_id").alias("n_id"), cos.alias("cosine"))
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", "n_id", F.round("cosine", 6).alias("cosine_r"), "rank")
+    n = _normed(t(spark, sf_dir, "embeddings"))
+    return _top(_exact(n, _queries(n)), _TOP_K).select(
+        "q_id", "n_id", F.round("cosine", 6).alias("cosine_r"), "rank"
     )
 
 
@@ -111,11 +237,8 @@ def s49_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs product. (On this synthetic near-orthogonal corpus recall
     is intrinsically modest; clustered real embeddings collide far
     more.)"""
-    em = t(spark, sf_dir, "embeddings")
-    sig = em.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(fold_dot("embedding", "embedding")).alias("nrm"),
+    sig = _normed(
+        t(spark, sf_dir, "embeddings"),
         F.explode(
             F.array(
                 *[
@@ -141,33 +264,15 @@ def s49_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("tb"),
     ).select("vec_id", "embedding", "nrm", "tb.tbl", "tb.bucket")
-    q = sig.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "tbl",
-        "bucket",
-    )
-    cos = fold_dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
     cand = (
-        sig.join(F.broadcast(q), on=["tbl", "bucket"])
+        sig.join(F.broadcast(_queries(sig, "tbl", "bucket")), on=["tbl", "bucket"])
         .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", F.col("vec_id").alias("n_id"), cos.alias("cosine"))
+        .select("q_id", F.col("vec_id").alias("n_id"), _qcos().alias("cosine"))
         .dropDuplicates(["q_id", "n_id"])
     )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "n_id", F.round("cosine", 6).alias("cosine_r"), "rank")
+    return _top(cand, 3).select(
+        "q_id", "n_id", F.round("cosine", 6).alias("cosine_r"), "rank"
     )
-
-
-_IVF_K = 16  # coarse-quantizer cells (↑ to sqrt(n) at scale)
-_IVF_NPROBE = 2  # cells each query probes
-_IVF_TOP_K = 3
 
 
 @query(
@@ -224,63 +329,9 @@ def s50_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation is an equi-join on c_id touching ~nprobe/K of the
     corpus per query. Complements s49: IVF gives tunable recall via
     nprobe with disjoint cells, LSH via multi-table union."""
-    em = t(spark, sf_dir, "embeddings")
-    n = em.select(
-        "vec_id", "embedding", F.sqrt(fold_dot("embedding", "embedding")).alias("nrm")
-    )
-    cent = n.filter(
-        (F.col("vec_id") >= _N_QUERIES) & (F.col("vec_id") < _N_QUERIES + _IVF_K)
-    ).select(
-        (F.col("vec_id") - _N_QUERIES).cast("int").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    # Deliberate broadcast product vs the K-row centroid table: the
-    # fan-out is bounded by the quantizer size, not by data (the one
-    # sanctioned nested-loop shape besides d47/q48 — see
-    # test_plan_quality.test_no_accidental_cartesian_products).
-    ccos = fold_dot("embedding", "c_emb") / (F.col("nrm") * F.col("c_nrm"))
-    scored = n.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "embedding", "nrm", "c_id", ccos.alias("ccos")
-    )
-    # argmax over centroids = max(struct(ccos, -c_id)): highest cosine,
-    # smallest c_id on ties — identical order to the oracle's
-    # ROW_NUMBER(ORDER BY ccos DESC, c_id). Map-side combinable, and
-    # first(embedding/nrm) is deterministic (constant within group).
-    cell = (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max(F.struct(F.col("ccos"), (-F.col("c_id")).alias("neg_c"))).alias("m"),
-            F.first("embedding").alias("embedding"),
-            F.first("nrm").alias("nrm"),
-        )
-        .select("vec_id", "embedding", "nrm", (-F.col("m.neg_c")).alias("c_id"))
-    )
-    from pyspark.sql import Window as W
-
-    wq = W.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("c_id"))
-    probe = (
-        scored.filter(F.col("vec_id") < _N_QUERIES)
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            "c_id",
-        )
-    )
-    cos = fold_dot("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-    cand = (
-        cell.join(F.broadcast(probe), "c_id")
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", F.col("vec_id").alias("n_id"), cos.alias("cosine"))
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _IVF_TOP_K)
-        .select("q_id", "n_id", F.round("cosine", 6).alias("cosine_r"), "rank")
+    n = _normed(t(spark, sf_dir, "embeddings"))
+    return _top(_ivf_candidates(n), _IVF_TOP_K).select(
+        "q_id", "n_id", F.round("cosine", 6).alias("cosine_r"), "rank"
     )
 
 
@@ -1581,81 +1632,11 @@ _S62 = f"""
 """
 
 
-@query("s62_ivf_recall", _S62)
-def s62_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@1/5/10 of the s50 IVF configuration against the exact
-    scan over the same probes (see block comment) — the nprobe-tuning
-    curve as an oracle-checked one-row table.
-
-    Scale shape: the exact arm is probe-bounded (probes broadcast, the
-    s48 pattern); the IVF arm touches ~nprobe/K of the corpus per
-    probe; the recall join runs on ≤ probes×k pairs. At 100 TB the
-    exact arm runs on a SAMPLE of probes (it is the measurement, not
-    the serving path) while the IVF arm is the serving plan itself."""
-    from pyspark.sql import Window as W
-
-    em = t(spark, sf_dir, "embeddings")
-    n = em.select(
-        "vec_id", "embedding", fold_norm("embedding").alias("nrm")
-    ).transform(persist_once)
-    cent = n.filter(
-        (F.col("vec_id") >= _N_QUERIES) & (F.col("vec_id") < _N_QUERIES + _IVF_K)
-    ).select(
-        (F.col("vec_id") - _N_QUERIES).cast("int").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    # sanctioned broadcast product vs the K-row quantizer (s50 note)
-    ccos = fold_dot("embedding", "c_emb") / (F.col("nrm") * F.col("c_nrm"))
-    scored = n.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "embedding", "nrm", "c_id", ccos.alias("ccos")
-    )
-    cell = (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max(F.struct(F.col("ccos"), (-F.col("c_id")).alias("neg_c"))).alias("m"),
-            F.first("embedding").alias("embedding"),
-            F.first("nrm").alias("nrm"),
-        )
-        .select("vec_id", "embedding", "nrm", (-F.col("m.neg_c")).alias("c_id"))
-    )
-    wq = W.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("c_id"))
-    probe = (
-        scored.filter(F.col("vec_id") < _N_QUERIES)
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            "c_id",
-        )
-    )
-    cosi = fold_dot("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-    wr = W.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    ivf = (
-        cell.join(F.broadcast(probe), "c_id")
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", F.col("vec_id").alias("n_id"), cosi.alias("cos"))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= _S62_TOP_K)
-        .select("q_id", "n_id", F.col("rank").alias("i_rank"))
-    )
-    q = n.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cose = fold_dot("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-    exact = (
-        n.join(F.broadcast(q), F.col("q_id") != F.col("vec_id"))
-        .select("q_id", F.col("vec_id").alias("n_id"), cose.alias("cos"))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= _S62_TOP_K)
-        .select("q_id", "n_id", F.col("rank").alias("e_rank"))
-    )
-    pairs = exact.join(ivf, ["q_id", "n_id"]).select(
-        F.greatest("e_rank", "i_rank").alias("mr")
+def _recall(exact: DataFrame, other: DataFrame, rank: str) -> DataFrame:
+    """One row of hits and recall@1/5/10 in ppm of ``other``'s top-10
+    (rank column ``rank``) against the exact top-10 (``e_rank``)."""
+    pairs = exact.join(other, ["q_id", "n_id"]).select(
+        F.greatest("e_rank", rank).alias("mr")
     )
     nq = _N_QUERIES
     return pairs.agg(
@@ -1667,6 +1648,27 @@ def s62_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"sum(CASE WHEN mr <= 5 THEN 1 ELSE 0 END) * 1000000 div (5 * {nq})").alias("recall_5_ppm"),
         F.expr(f"sum(CASE WHEN mr <= 10 THEN 1 ELSE 0 END) * 1000000 div (10 * {nq})").alias("recall_10_ppm"),
     )
+
+
+@query("s62_ivf_recall", _S62)
+def s62_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@1/5/10 of the s50 IVF configuration against the exact
+    scan over the same probes (see block comment) — the nprobe-tuning
+    curve as an oracle-checked one-row table.
+
+    Scale shape: the exact arm is probe-bounded (probes broadcast, the
+    s48 pattern); the IVF arm touches ~nprobe/K of the corpus per
+    probe; the recall join runs on ≤ probes×k pairs. At 100 TB the
+    exact arm runs on a SAMPLE of probes (it is the measurement, not
+    the serving path) while the IVF arm is the serving plan itself."""
+    n = _normed(t(spark, sf_dir, "embeddings")).transform(persist_once)
+    ivf = _top(_ivf_candidates(n), _S62_TOP_K).select(
+        "q_id", "n_id", F.col("rank").alias("i_rank")
+    )
+    exact = _top(_exact(n, _queries(n)), _S62_TOP_K).select(
+        "q_id", "n_id", F.col("rank").alias("e_rank")
+    )
+    return _recall(exact, ivf, "i_rank")
 
 
 # --- s63: prefix-truncation (Matryoshka) recall ---------------------
@@ -1741,50 +1743,20 @@ def s63_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles; at deployment the truncated scan reads HALF the vector
     bytes — with columnar storage of fixed-size arrays that is real
     I/O savings, not just FLOPs."""
-    from pyspark.sql import Window as W
-
-    em = t(spark, sf_dir, "embeddings")
     trunc_col = F.slice("embedding", 1, _S63_M)
-    n = em.select(
-        "vec_id",
-        "embedding",
-        fold_norm("embedding").alias("nrm"),
+    n = _normed(
+        t(spark, sf_dir, "embeddings"),
         F.sqrt(fold_dot(trunc_col, trunc_col)).alias("tnrm"),
     ).transform(persist_once)
-    q = n.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("tnrm").alias("q_tnrm"),
+    q = _queries(n, F.col("tnrm").alias("q_tnrm"))
+    tdot = fold_dot(F.slice("q_emb", 1, _S63_M), trunc_col)
+    trunc = _top(
+        _exact(n, q, tdot / (F.col("q_tnrm") * F.col("tnrm"))), _S63_TOP_K
+    ).select("q_id", "n_id", F.col("rank").alias("t_rank"))
+    exact = _top(_exact(n, q), _S63_TOP_K).select(
+        "q_id", "n_id", F.col("rank").alias("e_rank")
     )
-    wr = W.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-
-    def ranked(score_col, rank_name):
-        return (
-            n.join(F.broadcast(q), F.col("q_id") != F.col("vec_id"))
-            .select("q_id", F.col("vec_id").alias("n_id"), score_col.alias("cos"))
-            .withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= _S63_TOP_K)
-            .select("q_id", "n_id", F.col("rank").alias(rank_name))
-        )
-
-    tdot = fold_dot(F.slice("q_emb", 1, _S63_M), F.slice("embedding", 1, _S63_M))
-    trunc = ranked(tdot / (F.col("q_tnrm") * F.col("tnrm")), "t_rank")
-    edot = fold_dot("q_emb", "embedding")
-    exact = ranked(edot / (F.col("q_nrm") * F.col("nrm")), "e_rank")
-    pairs = exact.join(trunc, ["q_id", "n_id"]).select(
-        F.greatest("e_rank", "t_rank").alias("mr")
-    )
-    nq = _N_QUERIES
-    return pairs.agg(
-        F.lit(nq).cast("long").alias("n_probes"),
-        F.sum(F.when(F.col("mr") <= 1, 1).otherwise(0)).alias("hits_1"),
-        F.sum(F.when(F.col("mr") <= 5, 1).otherwise(0)).alias("hits_5"),
-        F.sum(F.when(F.col("mr") <= 10, 1).otherwise(0)).alias("hits_10"),
-        F.expr(f"sum(CASE WHEN mr <= 1 THEN 1 ELSE 0 END) * 1000000 div (1 * {nq})").alias("recall_1_ppm"),
-        F.expr(f"sum(CASE WHEN mr <= 5 THEN 1 ELSE 0 END) * 1000000 div (5 * {nq})").alias("recall_5_ppm"),
-        F.expr(f"sum(CASE WHEN mr <= 10 THEN 1 ELSE 0 END) * 1000000 div (10 * {nq})").alias("recall_10_ppm"),
-    )
+    return _recall(exact, trunc, "t_rank")
 
 
 # --- s64: embedding-table quality audit -----------------------------
@@ -1933,27 +1905,8 @@ def s65_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the total as a metadata-only corpus count broadcast as one
     row. The audit costs one corpus scan, unpersisted."""
     em = t(spark, sf_dir, "embeddings")
-    n = em.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(fold_dot("embedding", "embedding")).alias("nrm"),
-    )
-    cent = n.filter(
-        (F.col("vec_id") >= _N_QUERIES) & (F.col("vec_id") < _N_QUERIES + _IVF_K)
-    ).select(
-        (F.col("vec_id") - _N_QUERIES).cast("int").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    ccos = fold_dot("embedding", "c_emb") / (F.col("nrm") * F.col("c_nrm"))
-    scored = n.crossJoin(F.broadcast(cent.select("c_id", "c_emb", "c_nrm"))).select(
-        "vec_id", "c_id", ccos.alias("ccos")
-    )
-    # same argmax-as-max(struct) trick as s50: highest cosine, lowest
-    # c_id on ties — no per-vector window needed
-    cell = scored.groupBy("vec_id").agg(
-        F.max(F.struct(F.col("ccos"), (-F.col("c_id")).alias("neg"))).alias("best")
-    ).select("vec_id", (-F.col("best.neg")).cast("int").alias("c_id"))
+    n = _normed(em)
+    cell = _cells(_cell_scores(n))
     # Aggregate BEFORE joining the centroid spine: join-then-group
     # planned as a sort-merge join that shuffled the corpus-sized
     # assignment on 16 skewed cell ids (caught by the r9 PLAN_AUDIT
@@ -1962,7 +1915,7 @@ def s65_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast rows; empty cells come back via the left join + 0.
     counts = cell.groupBy("c_id").agg(F.count(F.lit(1)).alias("cnt"))
     sizes = (
-        cent.select("c_id")
+        _centroids(n).select("c_id")
         .join(F.broadcast(counts), "c_id", "left")
         .select(
             "c_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("n_members")
@@ -2136,28 +2089,25 @@ def _ivf_ranked(spark: SparkSession, sf_dir: str):
     repeat invocations reuse it silently instead of WARN-spamming.
     Footprint bound: one normed-embeddings + one 5-int-column ranking
     relation per distinct sf_dir."""
-    from pyspark.sql.window import Window
-
-    em = t(spark, sf_dir, "embeddings")
-    n = em.select(
-        "vec_id", "embedding", F.sqrt(fold_dot("embedding", "embedding")).alias("nrm")
-    ).transform(persist_materialized)
-    cent = n.filter(
-        (F.col("vec_id") >= _N_QUERIES) & (F.col("vec_id") < _N_QUERIES + _IVF_K)
-    ).select(
-        (F.col("vec_id") - _N_QUERIES).cast("int").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    ccos = fold_dot("embedding", "c_emb") / (F.col("nrm") * F.col("c_nrm"))
-    scored = n.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "embedding", "nrm", "c_id", ccos.alias("ccos")
-    )
-    wq = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("c_id"))
-    ranked = scored.withColumn("rn", F.row_number().over(wq)).transform(
+    n = _normed(t(spark, sf_dir, "embeddings")).transform(persist_materialized)
+    ranked = _rank_cells(_cell_scores(n, "embedding", "nrm")).transform(
         persist_materialized
     )
     return n, ranked
+
+
+def _ranked_candidates(ranked: DataFrame, probes: DataFrame, *cols) -> DataFrame:
+    """IVF candidates from the persisted ranking: ``cols, q_id, n_id,
+    cosine``, each probe row against the members of its cell (rn = 1)
+    but itself."""
+    cells = ranked.filter(F.col("rn") == 1).select(
+        F.col("vec_id").alias("n_id"), "embedding", "nrm", "c_id"
+    )
+    return (
+        probes.join(cells, "c_id")
+        .filter(F.col("n_id") != F.col("q_id"))
+        .select(*cols, "q_id", "n_id", _qcos().alias("cosine"))
+    )
 
 
 @query("s67_ivf_efficiency", _S67)
@@ -2170,52 +2120,17 @@ def s67_ivf_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberate ground-truth product — bounded by the 10-query probe
     set like s48, documented as the verification cost, not the
     serving path."""
-    from pyspark.sql.window import Window
-
     n, ranked = _ivf_ranked(spark, sf_dir)
-    cell = ranked.filter(F.col("rn") == 1).select(
-        "vec_id", "embedding", "nrm", "c_id"
-    )
-    probe = ranked.filter(
-        (F.col("vec_id") < _N_QUERIES) & (F.col("rn") <= _IVF_NPROBE)
-    ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "c_id",
-    )
-    qcos = fold_dot("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-    cand = (
-        probe.join(cell.withColumnRenamed("vec_id", "n_id"), "c_id")
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "n_id", qcos.alias("cosine"))
-        .transform(persist_materialized)
-    )
     # materialized at persist (owned-only count, r13) before the top-1
     # + count double consumption
-    wtop = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    ivf_top = (
-        cand.withColumn("rk", F.row_number().over(wtop))
-        .filter(F.col("rk") == 1)
-        .select("q_id", F.col("n_id").alias("ivf_top1"))
+    cand = _ranked_candidates(ranked, _probes(ranked)).transform(
+        persist_materialized
     )
+    ivf_top = _top(cand, 1, "rk").select("q_id", F.col("n_id").alias("ivf_top1"))
     counts = cand.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_candidates"))
     corpus = n.agg(F.count(F.lit(1)).alias("n_corpus"))
-    q = n.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    ex = (
-        n.withColumnRenamed("vec_id", "n_id")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "n_id", qcos.alias("cosine"))
-    )
-    exact_top = (
-        ex.withColumn("rk", F.row_number().over(wtop))
-        .filter(F.col("rk") == 1)
-        .select("q_id", F.col("n_id").alias("exact_top1"))
+    exact_top = _top(_exact(n, _queries(n)), 1, "rk").select(
+        "q_id", F.col("n_id").alias("exact_top1")
     )
     return (
         counts.join(ivf_top, "q_id")
@@ -2323,62 +2238,25 @@ def s68_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the config fan-out multiplies only the 10-row probe
     relation; cells assign once; the exhaustive side is the same
     probe-bounded ground truth as s67."""
-    from pyspark.sql.window import Window
-
     n, ranked = _ivf_ranked(spark, sf_dir)
-    cell = ranked.filter(F.col("rn") == 1).select(
-        F.col("vec_id").alias("n_id"), "embedding", "nrm", "c_id"
-    )
     nps = spark.createDataFrame([(np,) for np in _S68_NPROBES], "np int")
-    probe = (
-        ranked.filter(F.col("vec_id") < _N_QUERIES)
-        .crossJoin(F.broadcast(nps))
-        .filter(F.col("rn") <= F.col("np"))
-        .select(
-            "np",
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            "c_id",
-        )
-    )
-    qcos = fold_dot("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-    cand = (
-        probe.join(cell, "c_id")
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select("np", "q_id", "n_id", qcos.alias("cosine"))
-        .transform(persist_materialized)
+    probe = _queries(
+        ranked.crossJoin(F.broadcast(nps)).filter(F.col("rn") <= F.col("np")),
+        "c_id",
+        "np",
     )
     # materialized at persist (owned-only count, r13) before the top-1
     # + count double consumption
-    wtop = Window.partitionBy("np", "q_id").orderBy(
-        F.desc("cosine"), F.asc("n_id")
-    )
-    ivf_top = (
-        cand.withColumn("rk", F.row_number().over(wtop))
-        .filter(F.col("rk") == 1)
-        .select("np", "q_id", F.col("n_id").alias("ivf_top1"))
+    cand = _ranked_candidates(ranked, probe, "np").transform(persist_materialized)
+    ivf_top = _top(cand, 1, "rk", by=("np", "q_id")).select(
+        "np", "q_id", F.col("n_id").alias("ivf_top1")
     )
     counts = cand.groupBy("np", "q_id").agg(
         F.count(F.lit(1)).alias("n_candidates")
     )
     corpus = n.agg(F.count(F.lit(1)).alias("n_corpus"))
-    q = n.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    ex = (
-        n.withColumnRenamed("vec_id", "n_id")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "n_id", qcos.alias("cosine"))
-    )
-    wex = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    exact_top = (
-        ex.withColumn("rk", F.row_number().over(wex))
-        .filter(F.col("rk") == 1)
-        .select("q_id", F.col("n_id").alias("exact_top1"))
+    exact_top = _top(_exact(n, _queries(n)), 1, "rk").select(
+        "q_id", F.col("n_id").alias("exact_top1")
     )
     return (
         counts.join(ivf_top, ["np", "q_id"])
@@ -2465,41 +2343,9 @@ def s69_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the IVF side is s50's plan; the exhaustive side the
     probe-bounded ground truth; the reciprocal-rank election is a
     per-query MAX over the candidate equi-join — one summary row."""
-    from pyspark.sql.window import Window
-
     n, ranked = _ivf_ranked(spark, sf_dir)
-    cell = ranked.filter(F.col("rn") == 1).select(
-        F.col("vec_id").alias("n_id"), "embedding", "nrm", "c_id"
-    )
-    probe = ranked.filter(
-        (F.col("vec_id") < _N_QUERIES) & (F.col("rn") <= _IVF_NPROBE)
-    ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "c_id",
-    )
-    qcos = fold_dot("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-    wrk = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    cand = (
-        probe.join(cell, "c_id")
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "n_id", qcos.alias("cosine"))
-        .withColumn("rk", F.row_number().over(wrk))
-    )
-    q = n.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    ex = (
-        n.withColumnRenamed("vec_id", "n_id")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "n_id", qcos.alias("cosine"))
-        .withColumn("rk", F.row_number().over(wrk))
-    )
-    truth = ex.filter(F.col("rk") == 1).select(
+    cand = _top(_ranked_candidates(ranked, _probes(ranked)), None, "rk")
+    truth = _top(_exact(n, _queries(n)), 1, "rk").select(
         "q_id", F.col("n_id").alias("true_top1")
     )
     rr = (

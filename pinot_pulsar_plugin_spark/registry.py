@@ -372,9 +372,8 @@ _IMPL_REPLACED = {
     "q108_journey_paths": 13,
     "q145_label_propagation": 13,
     "q149_bfs_reachability": 13,
-    "s67_ivf_efficiency": 13,
-    "s68_nprobe_sweep": 13,
-    "s69_mrr_eval": 13,
+    # s67/s68/s69: r13 rows superseded by the r15 vector-search layer
+    # below — latest replacement round wins.
     # r14 optimization round (OPTIMIZATION_r14.md):
     # - d55: the delta×corpus collision join + pair-count aggregate
     #   replaced by d52's rarity-order prefix filter (exact pruning —
@@ -442,6 +441,25 @@ _IMPL_REPLACED = {
     "t80_crosscorpus_ngram_recall": 15,
     "t83_heldout_lm_surprisal": 15,
     "t87_syndication_matrix": 15,
+    # r15 vector-search layer (operators/similarity.py): the normed
+    # corpus, the query set, the exact scan and its (cosine DESC, n_id)
+    # top-k, the IVF centroids, cell scores, argmax cells, probes and
+    # candidates are each written once and every copy routes through
+    # them. Frame-equal at sf0.1 and oracle parity OK at
+    # sf0.001/sf0.01/sf0.1 for all (s49 rows-only); normalized
+    # optimized plans identical for s48/s49/s50, and for s62/s63/s65
+    # up to alias names. s67/s68/s69 differ cosmetically (rk = 1 →
+    # rk <= 1, cross join + filter → inner join on the same condition,
+    # conjunct and projection order).
+    "s48_cosine_topk": 15,
+    "s49_ann_lsh_topk": 15,
+    "s50_ann_ivf_topk": 15,
+    "s62_ivf_recall": 15,
+    "s63_matryoshka_recall": 15,
+    "s65_ivf_cell_balance": 15,
+    "s67_ivf_efficiency": 15,
+    "s68_nprobe_sweep": 15,
+    "s69_mrr_eval": 15,
 }
 
 

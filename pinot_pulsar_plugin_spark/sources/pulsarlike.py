@@ -783,17 +783,14 @@ def _pickle_by_value() -> None:
     Registering the three source modules with pyspark's cloudpickle
     makes the pickled class self-contained — the same technique used
     for notebook-defined sources."""
-    try:
-        from pyspark import cloudpickle
+    from pyspark import cloudpickle
 
-        import pinot_pulsar_plugin_spark.sources.fakebroker as _fb
-        import pinot_pulsar_plugin_spark.sources.offsets as _off
-        import pinot_pulsar_plugin_spark.sources.pulsarlike as _self
+    import pinot_pulsar_plugin_spark.sources.fakebroker as _fb
+    import pinot_pulsar_plugin_spark.sources.offsets as _off
+    import pinot_pulsar_plugin_spark.sources.pulsarlike as _self
 
-        for mod in (_off, _fb, _self):
-            cloudpickle.register_pickle_by_value(mod)
-    except Exception:
-        pass  # old cloudpickle: fall back to addPyFile shipping only
+    for mod in (_off, _fb, _self):
+        cloudpickle.register_pickle_by_value(mod)
 
 
 def register(spark) -> None:

@@ -29,12 +29,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 # pulsarlike source handles in register(). Found by the non-repo-cwd
 # verify drive: a module-level function pickled by REFERENCE raises
 # ModuleNotFoundError on the worker.
-try:
-    from pyspark import cloudpickle as _pyspark_cloudpickle
+from pyspark import cloudpickle
 
-    _pyspark_cloudpickle.register_pickle_by_value(sys.modules[__name__])
-except (ImportError, AttributeError):  # old pyspark: repo-on-path only
-    pass
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 from pinot_pulsar_plugin_spark.operators.eventanalytics import (
     _ATTR_WINDOW_US as ATTR_WINDOW_US,  # single definition, shared with q107

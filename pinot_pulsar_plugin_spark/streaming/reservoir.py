@@ -32,12 +32,9 @@ from pinot_pulsar_plugin_spark.operators.curation import (
 )
 
 # ship by value with pyspark's VENDORED cloudpickle (see anomaly.py)
-try:
-    from pyspark import cloudpickle as _pyspark_cloudpickle
+from pyspark import cloudpickle
 
-    _pyspark_cloudpickle.register_pickle_by_value(sys.modules[__name__])
-except (ImportError, AttributeError):  # old pyspark: repo-on-path only
-    pass
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 _OUTPUT_SCHEMA = (
     "lang string, doc_id bigint, n_chars bigint, priority double,"

@@ -26,12 +26,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 # same worker-shipping constraint as attribution/anomaly: register this
 # module by value with pyspark's VENDORED cloudpickle
-try:
-    from pyspark import cloudpickle as _pyspark_cloudpickle
+from pyspark import cloudpickle
 
-    _pyspark_cloudpickle.register_pickle_by_value(sys.modules[__name__])
-except (ImportError, AttributeError):  # old pyspark: repo-on-path only
-    pass
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # q29's inactivity gap
 

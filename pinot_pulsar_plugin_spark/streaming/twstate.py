@@ -30,12 +30,9 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 # same worker-shipping constraint as the other stateful modules
-try:
-    from pyspark import cloudpickle as _pyspark_cloudpickle
+from pyspark import cloudpickle
 
-    _pyspark_cloudpickle.register_pickle_by_value(sys.modules[__name__])
-except (ImportError, AttributeError):  # old pyspark: repo-on-path only
-    pass
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 from pinot_pulsar_plugin_spark.streaming.anomaly import _moments_pass
 

@@ -498,3 +498,51 @@ def test_s69_mrr_consistency_with_s67(spark):
     # every agreeing query contributes the full 1e6 to the MRR sum
     assert r.mrr_micro >= agree * 1_000_000 // r.n_queries
     assert r.n_hits >= agree
+
+
+def test_ivf_assignment_forms_agree(spark):
+    """The two IVF assignment forms build the same index: the
+    map-side max(struct) argmax of s50/s62/s65 (``_cells``) gives every
+    vector the rn = 1 cell of the persisted window ranking s67–s69
+    read (``_ivf_ranked``), and the probes s50 takes from an
+    unpersisted ranking are exactly each query's rn <= nprobe cells."""
+    n, ranked = S._ivf_ranked(spark, SF)
+    argmax = {(r.vec_id, r.c_id) for r in S._cells(S._cell_scores(n)).collect()}
+    window = {
+        (r.vec_id, r.c_id)
+        for r in ranked.filter("rn = 1").select("vec_id", "c_id").collect()
+    }
+    assert len(argmax) == n.count()
+    assert argmax == window
+    scored = S._cell_scores(n, "embedding", "nrm")
+    probes = {(r.q_id, r.c_id) for r in S._probes(S._rank_cells(scored)).collect()}
+    near = {
+        (r.vec_id, r.c_id)
+        for r in ranked.filter(
+            f"vec_id < {S._N_QUERIES} AND rn <= {S._IVF_NPROBE}"
+        ).collect()
+    }
+    assert len(probes) == S._N_QUERIES * S._IVF_NPROBE
+    assert probes == near
+
+
+def test_top_breaks_cosine_ties_by_n_id_and_exact_drops_self_pairs(spark):
+    """Hand-made frames: ``_top`` ranks equal cosines by ascending
+    n_id within each query, and ``_exact`` pairs each query with every
+    vector but itself."""
+    scored = spark.createDataFrame(
+        [(0, 7, 0.5), (0, 3, 0.5), (0, 5, 0.9), (0, 1, 0.1), (1, 4, 0.2), (1, 2, 0.2)],
+        "q_id int, n_id int, cosine double",
+    )
+    got = {
+        (r.q_id, r.rank): r.n_id for r in S._top(scored, 3).collect()
+    }
+    assert got == {(0, 1): 5, (0, 2): 3, (0, 3): 7, (1, 1): 2, (1, 2): 4}
+
+    emb = [[1.0, 0.0], [0.0, 1.0], [1.0, 1.0]]
+    em = spark.createDataFrame(
+        list(zip([0, 1, S._N_QUERIES], emb)), "vec_id bigint, embedding array<float>"
+    )
+    n = S._normed(em)
+    pairs = {(r.q_id, r.n_id) for r in S._exact(n, S._queries(n)).collect()}
+    assert pairs == {(0, 1), (0, S._N_QUERIES), (1, 0), (1, S._N_QUERIES)}
