@@ -93,7 +93,11 @@ def q44_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q45_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q3-shaped shipping priority: filtered star join → grouped
     revenue → global top-10. Customer dim broadcasts; exact-cents
-    revenue makes the LIMIT deterministic cross-engine."""
+    revenue makes the LIMIT deterministic cross-engine.
+
+    Scale shape: both timestamp filters reach PushedFilters, and
+    TakeOrderedAndProject replaces a global sort — each task keeps 10
+    rows, the driver merges."""
     c = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp")

@@ -271,7 +271,11 @@ def q91_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     the histogram combines map-side and sorts only distinct cents
     values (0.68s, 15×; also faster at sf0.1, 0.49 vs 0.58). The
     approximate alternative (percentile_approx bounds) is what
-    q43/q57 cover."""
+    q43/q57 cover.
+
+    Scale shape: one map-side-combinable exchange on (event_type,
+    cents), so shuffle volume is the distinct-pair count, not rows;
+    the mean is a fixed-point integer sum."""
     return trimmed_mean_hist(t(spark, sf_dir, "events"))
 
 
@@ -472,7 +476,11 @@ def q122_exact_corr_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable, one exchange), and the closed-form Pearson/slope is a
     single deterministic double expression over identical integers —
     reproducible across engines, shuffle schedules, AND cluster sizes,
-    which the native aggregate cannot promise."""
+    which the native aggregate cannot promise.
+
+    Scale shape: five integer co-moments in one map-side-combinable
+    exchange; Pearson/slope is a projection over the #flags-row
+    result."""
     li = t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.round("l_quantity").cast("long").alias("q"),

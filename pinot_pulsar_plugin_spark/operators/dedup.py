@@ -636,7 +636,7 @@ def d53_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs and has no quadratic term anywhere: a hot boilerplate span
     contributes its occurrence count linearly.
 
-    Shape: spans hash to 8 bytes in the row (xxhash64 over the token
+    Scale shape: spans hash to 8 bytes in the row (xxhash64 over the token
     slice, multiplicity preserved — no array_distinct, occurrences ARE
     the signal); one combinable count on h; the span table rejoins the
     count on h (both sides exchange on h, AQE skew-split covers hot
@@ -748,7 +748,10 @@ def d54_winnow_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc counts, a fingerprint equi-join (never a cross join), and
     the Jaccard filter. Fingerprint document frequency is winnow-
     bounded (max df 6 on this corpus); a boilerplate-heavy corpus
-    would add d44's stop-list broadcast anti-join unchanged."""
+    would add d44's stop-list broadcast anti-join unchanged.
+
+    Scale shape: only narrow keys (f, doc_id, doc_a) are exchanged,
+    and the sampling shrinks the join input before the first one."""
     return winnow_pairs(t(spark, sf_dir, "documents"), _WINNOW_JACCARD_MIN)
 
 

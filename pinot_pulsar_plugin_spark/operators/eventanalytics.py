@@ -522,7 +522,12 @@ def q106_equidepth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     types = 5 sort tasks over 10M rows; the histogram runs 0.78s,
     15.7×, and is ~0.1s slower at sf0.1 where the sort fits one task
     anyway — the 100-TB budget wins). The sketch path for unbounded
-    cardinality is q57's approx_quantiles."""
+    cardinality is q57's approx_quantiles.
+
+    Scale shape: one map-side-combinable exchange of per-(event_type,
+    value) counts; bin edges are integer arithmetic over the distinct
+    values, so a skewed group costs its distinct count, not a sort of
+    its rows."""
     return equidepth_bins_hist(t(spark, sf_dir, "events"))
 
 

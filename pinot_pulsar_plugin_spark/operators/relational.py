@@ -70,6 +70,11 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum_base_price measures ~3.6e19 in d=4 fixed point, past int64.
     All sums/avgs use the DECIMAL(38,0) wide accumulator; values are
     identical wherever the long form doesn't overflow.
+
+    Scale shape: the shipdate predicate reaches PushedFilters with a
+    pruned ReadSchema, and the partial aggregate combines map-side, so
+    the one data shuffle is #groups·#partitions rows. At 100 TB only
+    the scan parallelism grows.
     """
     li = t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -267,7 +272,11 @@ def q08_join_broadcast_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q09_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q5-shaped 5-way star join: dims broadcast down the chain;
     the single big shuffle is orders⋈lineitem on orderkey (AQE handles
-    skew). Catalyst reorders the joins; we still write dims-first."""
+    skew). Catalyst reorders the joins; we still write dims-first.
+
+    Scale shape: region→nation→customer collapse into one broadcast
+    dim; orders⋈lineitem is the single shuffle join (AQE splits skewed
+    partitions at runtime); the aggregation is partial+final."""
     r = t(spark, sf_dir, "region")
     n = t(spark, sf_dir, "nation")
     c = t(spark, sf_dir, "customer")
@@ -543,7 +552,11 @@ def q113_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB arithmetic bound (r11 audit): the single group is post-
     filter — Q19's conjunctive clauses select ~2e-5 of the fact, so
     the d=4 sum measures ~4e15 at the design point, 2000× inside
-    int64; the long accumulator stays."""
+    int64; the long accumulator stays.
+
+    Scale shape: both per-side residues reach PushedFilters, so the
+    broadcast join probes only candidate rows; the cross-clause
+    residual evaluates post-join inside codegen."""
     li = t(spark, sf_dir, "lineitem")
     p = t(spark, sf_dir, "part")
     clause = None
@@ -634,7 +647,10 @@ def q118_nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the disjunctive pair filter evaluates after the
     broadcasts where both nation names are in hand. Year extraction
     and fixed-point revenue keep the handful of output rows bit-equal
-    cross-engine."""
+    cross-engine.
+
+    Scale shape: the shipdate bounds push to the scan; the fact pays
+    only the orders join exchange plus the tiny final aggregate."""
     li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))

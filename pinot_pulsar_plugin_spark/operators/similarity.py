@@ -207,7 +207,10 @@ def s48_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The query side is broadcast (tiny), so the corpus never shuffles;
     per-query top-k is a window rank — Spark pushes a partial top-k
     before the shuffle. Ranking on the bit-exact fold keeps order
-    identical to the oracle."""
+    identical to the oracle.
+
+    Scale shape: one corpus scan scored by a codegen'd fold, and a
+    bounded per-query window; no corpus shuffle at any size."""
     n = _normed(t(spark, sf_dir, "embeddings"))
     return _top(_exact(n, _queries(n)), _TOP_K).select(
         "q_id", "n_id", F.round("cosine", 6).alias("cosine_r"), "rank"
@@ -2087,13 +2090,17 @@ def _ivf_ranked(spark: SparkSession, sf_dir: str):
     results, so they cannot be unpersisted here, and across those
     three queries the shared entry is the point — persist_once makes
     repeat invocations reuse it silently instead of WARN-spamming.
-    Footprint bound: one normed-embeddings + one 5-int-column ranking
-    relation per distinct sf_dir."""
+    Footprint bound: one normed-embeddings relation + one 3-int-column
+    ``(vec_id, c_id, rn)`` ranking per distinct sf_dir. The ranking
+    has ``_IVF_K`` rows per vector, so ``embedding`` and ``nrm`` are
+    joined back from ``n`` rather than cached once per centroid."""
     n = _normed(t(spark, sf_dir, "embeddings")).transform(persist_materialized)
-    ranked = _rank_cells(_cell_scores(n, "embedding", "nrm")).transform(
-        persist_materialized
+    ranked = (
+        _rank_cells(_cell_scores(n))
+        .select("vec_id", "c_id", "rn")
+        .transform(persist_materialized)
     )
-    return n, ranked
+    return n, ranked.join(n, "vec_id")
 
 
 def _ranked_candidates(ranked: DataFrame, probes: DataFrame, *cols) -> DataFrame:

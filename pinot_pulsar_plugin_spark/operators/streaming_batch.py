@@ -160,7 +160,7 @@ def st61_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     what lets Spark expire join state (exercised differentially against
     this batch form in tests/test_streaming_ops).
 
-    Batch shape: equi-join on user_id (one exchange per side, the range
+    Scale shape (batch): equi-join on user_id (one exchange per side, the range
     predicate evaluated inside the join) — never a cartesian; per-user
     event counts bound the pair work, and a hot user is AQE
     skew-splittable because the range condition is a post-filter on the

@@ -145,7 +145,9 @@ def q98_dominant_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate joined back on the group key, then the IN into a
     left-semi join — three hash aggregates and zero nested loops.
     Quantity sums are integral doubles (exact at any order), so the
-    share threshold compares identically on both engines."""
+    share threshold compares identically on both engines.
+
+    Scale shape: shuffles only on l_partkey, l_suppkey and s_suppkey."""
     for name in ("supplier", "lineitem", "part"):
         t(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(_Q98)

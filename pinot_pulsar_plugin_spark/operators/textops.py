@@ -361,7 +361,10 @@ def t60_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     so it runs at scan speed inside whole-stage codegen at any corpus
     size. The synthetic corpus has no PII, so the operator injects
     deterministic doc_id-derived PII first and redacts it — proving
-    redaction semantics differentially against the oracle engine."""
+    redaction semantics differentially against the oracle engine.
+
+    Scale shape: one codegen'd scan projection — no UDF, no shuffle,
+    no driver involvement at any corpus size."""
     d = t(spark, sf_dir, "documents")
     did = F.col("doc_id")
     email = F.concat(
@@ -1012,7 +1015,12 @@ def t66_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t67_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token-distribution entropy in integer micro-nats
     (see block comment). Zero-shuffle pure-codegen scan; fixed-point
-    term sums keep it bit-equal to the oracle."""
+    term sums keep it bit-equal to the oracle.
+
+    Scale shape: an in-row expression over a column-pruned scan;
+    per-token counts come from the sorted-run fold (O(n log n) per
+    row), with one integer division at the end. Zero exchanges at any
+    corpus size."""
     d = t(spark, sf_dir, "documents")
     tk = F.split(F.lower("text"), " ")
     base = d.select("doc_id", tk.alias("tk"))

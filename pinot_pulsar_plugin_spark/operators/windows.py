@@ -148,7 +148,11 @@ def q24_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q25_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer — the scalable per-group top-k (window
-    rank + filter; Spark pushes a per-partition limit before shuffle)."""
+    rank + filter; Spark pushes a per-partition limit before shuffle).
+
+    Scale shape: the limit is a WindowGroupLimit before the exchange,
+    so each map task forwards at most k rows per key — the shuffle is
+    bounded by k·#keys, not #rows."""
     o = t(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (

@@ -450,7 +450,10 @@ _IMPL_REPLACED = {
     # optimized plans identical for s48/s49/s50, and for s62/s63/s65
     # up to alias names. s67/s68/s69 differ cosmetically (rk = 1 →
     # rk <= 1, cross join + filter → inner join on the same condition,
-    # conjunct and projection order).
+    # conjunct and projection order). Later in r15, s67/s68/s69's
+    # shared ranking caches only (vec_id, c_id, rn) and joins the
+    # embedding back: plans moved, frames equal, parity OK at all
+    # three SFs (tools_refactorproof.py).
     "s48_cosine_topk": 15,
     "s49_ann_lsh_topk": 15,
     "s50_ann_ivf_topk": 15,

@@ -42,24 +42,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    size: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding (hopping) windows — each event contributes to
-    size/slide overlapping windows."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, size, slide))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("window.start").alias("window_start"), "n_events")
-    )
-
-
 def session_counts(
     events: DataFrame,
     *,

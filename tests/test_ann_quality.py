@@ -546,3 +546,25 @@ def test_top_breaks_cosine_ties_by_n_id_and_exact_drops_self_pairs(spark):
     n = S._normed(em)
     pairs = {(r.q_id, r.n_id) for r in S._exact(n, S._queries(n)).collect()}
     assert pairs == {(0, 1), (0, S._N_QUERIES), (1, 0), (1, S._N_QUERIES)}
+
+
+def test_ivf_ranked_caches_ints_not_one_embedding_per_centroid(spark):
+    """``_ivf_ranked`` keeps ``_IVF_K`` ranking rows per vector, so it
+    caches only their int columns and joins ``embedding``/``nrm`` back
+    from the normed corpus: its whole cache stays under twice that of
+    the corpus alone (a ranking that carries the embedding is ~17x)."""
+    from pinot_pulsar_plugin_spark.caching import persist_materialized
+    from pinot_pulsar_plugin_spark.operators.common import t
+
+    def cached_bytes():
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return sum(i.memSize() + i.diskSize() for i in infos)
+
+    spark.catalog.clearCache()
+    S._normed(t(spark, SF, "embeddings")).transform(persist_materialized)
+    corpus = cached_bytes()
+    spark.catalog.clearCache()
+    n, ranked = S._ivf_ranked(spark, SF)
+    assert corpus > 0
+    assert cached_bytes() < 2 * corpus
+    assert {"embedding", "nrm", "c_id", "rn"} <= set(ranked.columns)

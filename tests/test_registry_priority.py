@@ -263,10 +263,10 @@ def test_round_of_quotient_is_ratcheted():
     here: 'presum' = the SAFE pattern (fixed-pointing a per-row term
     BEFORE an integer sum; a term-level half-boundary shifts both
     engines identically pre-aggregation), 'quotient' = a final-result
-    rounding that is data-hazardous and relies on the
-    tools_paritysweep monitor. A NEW name failing this test means:
-    prefer the integer micro-unit division form (t63), or audit and
-    add it with a justification."""
+    rounding that is data-hazardous and relies on the registry-wide
+    ``tools_paritycheck.py --sf=sf0.1`` monitor. A NEW name failing
+    this test means: prefer the integer micro-unit division form
+    (t63), or audit and add it with a justification."""
     import re
 
     from pinot_pulsar_plugin_spark.registry import all_oracle_sql
